@@ -218,33 +218,18 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    qs, oracles = _collect()
+    qs, _ = _collect()
 
-    def wrap(name, fn):
+    def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
             configure(spark)
-            df = fn(spark, sf_dir)
-            if name in _DIAG_NAMES:
-                # In-driver diagnostic for the CORRECTNESS_r08 red rows:
-                # captures rows + engine versions from INSIDE whatever
-                # environment executes this (VERDICT r8 next-step #1).
-                try:
-                    from db_migrator_spark.diagnostics import maybe_capture
-
-                    maybe_capture(name, df, spark, sf_dir, oracles.get(name))
-                except Exception:
-                    pass
-            return df
+            return fn(spark, sf_dir)
 
         run.__name__ = getattr(fn, "__name__", "query")
         run.__doc__ = fn.__doc__
         return run
 
-    try:
-        from db_migrator_spark.diagnostics import RED_QUERIES as _DIAG_NAMES
-    except Exception:
-        _DIAG_NAMES = ()
-    return {name: wrap(name, fn) for name, fn in qs.items()}
+    return {name: wrap(fn) for name, fn in qs.items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -164,9 +164,13 @@ TOP_COST_R12: list[str] = [
 # - Input: $SPARK_GRAFT_SF1_DIR if set ("" / "skip" disables the
 #   group); otherwise /tmp/db_migrator_sf1_staging, STAGED by
 #   tools/make_sf1.py from the main $SPARK_GRAFT_SF_DIR input when
-#   absent (pure input re-arrangement — FK-consistent 10x replication
-#   of the fixture parquet; no query result or intermediate is ever
-#   persisted, and every timed run recomputes from the staged parquet).
+#   absent, and RE-staged when the source fingerprint recorded beside
+#   it (file names + sizes) no longer matches the source (pure input
+#   re-arrangement — FK-consistent 10x replication of the fixture
+#   parquet; no query result or intermediate is ever persisted, and
+#   every timed run recomputes from the staged parquet). A
+#   $SPARK_GRAFT_SF1_DIR that is not a directory skips the group with
+#   a warning.
 # - Action: noop sink (guide §1.4 — computes every column, no sink
 #   cost), min-of-2, first pass cold-included. This differs from the
 #   headline's min-of-5 .count() ON PURPOSE and is reported under
@@ -195,6 +199,17 @@ SF1_GROUP: list[str] = [
 ]
 
 _SF1_DEFAULT_STAGING = "/tmp/db_migrator_sf1_staging"
+_SF1_FINGERPRINT = "_SOURCE_FINGERPRINT"
+
+
+def _source_fingerprint(src: str) -> str:
+    """Relative file names and sizes under ``src``, one per line."""
+    entries = []
+    for root, _, files in os.walk(src):
+        for f in files:
+            p = os.path.join(root, f)
+            entries.append(f"{os.path.relpath(p, src)}\t{os.path.getsize(p)}")
+    return "\n".join(sorted(entries))
 
 
 def _resolve_sf1_dir(sf_dir: str, sf: float | None) -> str | None:
@@ -205,33 +220,49 @@ def _resolve_sf1_dir(sf_dir: str, sf: float | None) -> str | None:
         env = env.strip()
         if env in ("", "0", "skip"):
             return None
-        return env if os.path.isdir(env) else None
+        if not os.path.isdir(env):
+            print(f"# WARNING: SPARK_GRAFT_SF1_DIR={env!r} is not a "
+                  "directory; skipping sf1 group", file=sys.stderr)
+            return None
+        return env
     if sf != 0.1:
         return None  # group is defined relative to the driver bench SF
-    dst = _SF1_DEFAULT_STAGING
-    if os.path.isdir(dst):
-        return dst
+    import shutil
     import subprocess
     import tempfile
+
+    dst = _SF1_DEFAULT_STAGING
+    fingerprint = _source_fingerprint(sf_dir)
+    if os.path.isdir(dst):
+        try:
+            with open(os.path.join(dst, _SF1_FINGERPRINT)) as fh:
+                staged = fh.read()
+        except OSError:
+            staged = None
+        if staged == fingerprint:
+            return dst
+        print(f"# sf1 staging {dst} does not match {sf_dir}; restaging",
+              file=sys.stderr)
+        shutil.rmtree(dst)
 
     tools = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          "tools", "make_sf1.py")
     build = tempfile.mkdtemp(prefix="db_migrator_sf1_build_",
                              dir=os.path.dirname(dst) or "/tmp")
     try:
-        print("# staging sf1 input (tools/make_sf1.py, one-time)...",
+        print("# staging sf1 input (tools/make_sf1.py)...",
               file=sys.stderr)
         subprocess.run(
             [sys.executable, tools, sf_dir, build, "10"],
             check=True, capture_output=True, timeout=1800,
         )
+        with open(os.path.join(build, _SF1_FINGERPRINT), "w") as fh:
+            fh.write(fingerprint)
         os.rename(build, dst)  # atomic: never expose a partial staging
         return dst
     except Exception as exc:  # staging failure must not kill the bench
         print(f"# WARNING: sf1 staging failed ({exc}); skipping sf1 group",
               file=sys.stderr)
-        import shutil
-
         shutil.rmtree(build, ignore_errors=True)
         return None
 
@@ -312,10 +343,6 @@ def _run_canary(qs, spark, sf_dir: str) -> dict[str, float]:
 
 
 def main() -> None:
-    # The red-row diagnostic capture (db_migrator_spark/diagnostics.py)
-    # re-collects a query once — harmless for correctness runs, but it
-    # would distort bench timings, so bench opts out.
-    os.environ.setdefault("SPARK_GRAFT_NO_DIAG", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))

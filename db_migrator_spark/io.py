@@ -17,13 +17,9 @@ same loader serves sf0.001 and 100 TB — only the file listing grows.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .session import configure
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 TABLES = (
     "region",
@@ -37,10 +33,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -13,9 +13,10 @@ This module packages the pattern proven in
    arithmetic uses the EXACT per-bin counts,
 2. rank inside each bin with a bin-partitioned window (the parallel
    unit — every bin sorts independently),
-3. shift by each bin's exact cumulative offset, computed from the
-   per-bin counts with a broadcast cross-join aggregate over at most
-   ``(n_bins + 1)^2`` rows (never an unpartitioned window),
+3. shift by each bin's exact cumulative offset, computed in-plan from
+   the (eagerly materialized) per-bin counts with a broadcast cross-join
+   aggregate over at most ``(n_bins + 1)^2`` rows (never an
+   unpartitioned window, never a driver-side collect),
 4. optionally carry exact DECIMAL(38,0) running sums the same way.
 
 Equal key values always land in ONE bin (strict ``>`` against each cut),
@@ -27,6 +28,12 @@ cut-points (for an aggregate input that means re-running the aggregate —
 still fully parallel, and at 100 TB a recompute beats persisting a
 data-sized intermediate), then exactly one shuffle (the bin
 partitioning) per ranked ordering.
+
+Nested ranks (rank -> rank on the output) feed each level's output to
+two plan consumers (the rank window and the bin counts), so an
+unmaterialized chain re-runs its lineage 2^k times. Callers that nest
+put ``.localCheckpoint(eager=False)`` after every level
+(``quality.q_customer_rfm``; docs/SCALE.md multi-consumer rule).
 """
 
 from __future__ import annotations
@@ -37,11 +44,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
 _PID = "__dr_pid"
-
-# Upper bound on (key, bin) groups the driver-side offset fold accepts —
-# far above any dimension-bounded partition_by x 33 bins, far below a
-# data-sized one. Exceeding it is a contract violation, failed loudly.
-_FOLD_GROUP_BOUND = 200_000
 
 
 def quantile_cuts(
@@ -72,7 +74,6 @@ def with_global_rank(
     total_col: str = "n_total",
     cum_cols: Sequence[str] = (),
     partition_by: Sequence[str] = (),
-    fold: str = "plan",
 ) -> DataFrame:
     """Append the exact 1-based row number ``rank_col`` over
     ``(value_col [DESC], *tiebreaks ASC)`` plus the ranked relation's
@@ -96,34 +97,15 @@ def with_global_rank(
     partition, or ranks and running sums are nondeterministic. ``cuts``
     comes from :func:`quantile_cuts` on the same relation.
 
-    Two offset-fold modes, chosen by ``fold``:
-
-    - ``"plan"`` (default — use for a SINGLE rank over an input): the
-      per-bin offsets are computed in-plan via a broadcast cross-join /
-      keyed join over the tiny bin-count aggregate — ONE job, no extra
-      action. The input feeds two plan consumers (rank window + counts),
-      so its lineage appears twice — fine once, but it compounds 2^k
-      when ranks NEST (the round-8c iterate lesson: 54 base scans in the
-      three-rank RFM plan).
-    - ``"driver"`` (use when NESTING ranks): the offsets are folded on
-      the driver from one bounded collect of at most
-      ``(len(cuts) + 1) x |key domain|`` count rows (the same
-      bounded-driver-read class as centroids and histogram bins; exact
-      integer/Decimal arithmetic) and rejoined as a literal broadcast
-      relation, so the input lineage appears exactly ONCE per rank in
-      the final plan. Costs one extra parallel pass over ``df`` per
-      call — which is why it is not the default (A/B r10:
-      q_ntile_buckets 0.9 -> 2.1s warm under the driver fold).
-
-    In both modes ``partition_by`` must be dimension-bounded (nations,
-    priorities, langs — never a data-sized key), which is also the only
-    regime where a keyed CLOSED-FORM tile is the right tool; the driver
-    mode enforces it loudly (``_FOLD_GROUP_BOUND``).
+    The per-bin offsets are computed in-plan: the tiny bin-count
+    aggregate is materialized (one bounded job), then a broadcast
+    cross-join (global) or null-safe keyed join (``partition_by``)
+    folds it into each bin's exact offset — no driver-side collect.
+    ``partition_by`` must be dimension-bounded (nations, priorities,
+    langs — never a data-sized key), which is also the only regime
+    where a keyed CLOSED-FORM tile is the right tool; for per-entity
+    ranks use an ordinary keyed window, already parallel at that grain.
     """
-    import decimal
-
-    if fold not in ("plan", "driver"):
-        raise ValueError(f"fold must be 'plan' or 'driver', got {fold!r}")
     keys = list(partition_by)
     bin_expr = F.lit(0)
     for b in cuts:
@@ -153,143 +135,73 @@ def with_global_rank(
         )
     counts = parts.groupBy(*keys, _PID).agg(*aggs)
 
-    if fold == "plan":
-        # Eagerly materialize the tiny bin-count aggregate (<= 34 rows
-        # global, |key domain| x 34 keyed — dimension-bounded by the
-        # caller's contract): plan mode otherwise carries df's full
-        # lineage TWICE more (counts + its self-joined copy), so every
-        # AQE stage of the offsets side re-ran the input scan. One extra
-        # bounded job; the final plan scans df once. Measured r15 at sf1
-        # (q_winsorize rank pass, on top of the non-nullable bin fix):
-        # 3.2s -> 1.5s. Execution-only — values are the same aggregate.
-        counts = counts.localCheckpoint()
-        c2 = counts.select(
-            *[F.col(k).alias(f"__dr_k2_{k}") for k in keys],
-            F.col(_PID).alias("__dr_pid2"),
-            F.col("__dr_cnt").alias("__dr_cnt2"),
-            *[
-                F.col(f"__dr_sum_{c}").alias(f"__dr_sum2_{c}")
-                for c in cum_cols
-            ],
+    # Eagerly materialize the tiny bin-count aggregate (<= 34 rows
+    # global, |key domain| x 34 keyed — dimension-bounded by the
+    # caller's contract): the offsets side otherwise carries df's full
+    # lineage TWICE more (counts + its self-joined copy), so every
+    # AQE stage of the offsets side re-ran the input scan. One extra
+    # bounded job; the final plan scans df once. Measured r15 at sf1
+    # (q_winsorize rank pass, on top of the non-nullable bin fix):
+    # 3.2s -> 1.5s. Execution-only — values are the same aggregate.
+    counts = counts.localCheckpoint()
+    c2 = counts.select(
+        *[F.col(k).alias(f"__dr_k2_{k}") for k in keys],
+        F.col(_PID).alias("__dr_pid2"),
+        F.col("__dr_cnt").alias("__dr_cnt2"),
+        *[
+            F.col(f"__dr_sum_{c}").alias(f"__dr_sum2_{c}")
+            for c in cum_cols
+        ],
+    )
+    # "Earlier in the order" = smaller bin id ascending, larger
+    # descending (bins count strictly-greater cuts, so high values
+    # sit in high bin ids).
+    earlier = (
+        F.col("__dr_pid2") > F.col(_PID)
+        if descending
+        else F.col("__dr_pid2") < F.col(_PID)
+    )
+    offset_aggs = [
+        F.coalesce(F.sum(F.when(earlier, F.col("__dr_cnt2"))), F.lit(0))
+        .cast("long")
+        .alias("__dr_off"),
+        F.sum("__dr_cnt2").cast("long").alias(total_col),
+    ]
+    for c in cum_cols:
+        offset_aggs.append(
+            F.coalesce(
+                F.sum(F.when(earlier, F.col(f"__dr_sum2_{c}"))),
+                F.lit(0).cast("decimal(38,0)"),
+            )
+            .cast("decimal(38,0)")
+            .alias(f"__dr_soff_{c}")
         )
-        # "Earlier in the order" = smaller bin id ascending, larger
-        # descending (bins count strictly-greater cuts, so high values
-        # sit in high bin ids).
-        earlier = (
-            F.col("__dr_pid2") > F.col(_PID)
-            if descending
-            else F.col("__dr_pid2") < F.col(_PID)
+        offset_aggs.append(
+            F.sum(F.col(f"__dr_sum2_{c}"))
+            .cast("decimal(38,0)")
+            .alias(f"tot_{c}")
         )
-        offset_aggs = [
-            F.coalesce(F.sum(F.when(earlier, F.col("__dr_cnt2"))), F.lit(0))
-            .cast("long")
-            .alias("__dr_off"),
-            F.sum("__dr_cnt2").cast("long").alias(total_col),
-        ]
-        for c in cum_cols:
-            offset_aggs.append(
-                F.coalesce(
-                    F.sum(F.when(earlier, F.col(f"__dr_sum2_{c}"))),
-                    F.lit(0).cast("decimal(38,0)"),
-                )
-                .cast("decimal(38,0)")
-                .alias(f"__dr_soff_{c}")
-            )
-            offset_aggs.append(
-                F.sum(F.col(f"__dr_sum2_{c}"))
-                .cast("decimal(38,0)")
-                .alias(f"tot_{c}")
-            )
-        if keys:
-            # Null-safe key equality: a NULL partition key is a real group
-            # under a keyed window (NULLs group together), so the bin-pair
-            # join must not drop it the way plain `=` would (r10 ADVICE).
-            # No explicit broadcast hint here or on the final offsets
-            # join: with keys the relation is |key domain| x bins rows —
-            # bounded only by the CALLER's contract, which plan mode
-            # cannot verify without an extra action. AQE's runtime size
-            # check makes the broadcast decision instead (it still
-            # broadcasts the few-KB dimension case, and refuses — with a
-            # plannable fallback rather than a driver OOM — if a caller
-            # ever passes a data-sized key; r10 ADVICE).
-            cond = F.lit(True)
-            for k in keys:
-                cond = cond & F.col(k).eqNullSafe(F.col(f"__dr_k2_{k}"))
-            paired = counts.join(c2, cond).drop(
-                *[f"__dr_k2_{k}" for k in keys]
-            )
-        else:
-            paired = counts.crossJoin(F.broadcast(c2))
-        offsets = paired.groupBy(*keys, _PID).agg(*offset_aggs)
+    if keys:
+        # Null-safe key equality: a NULL partition key is a real group
+        # under a keyed window (NULLs group together), so the bin-pair
+        # join must not drop it the way plain `=` would (r10 ADVICE).
+        # No explicit broadcast hint here or on the final offsets
+        # join: with keys the relation is |key domain| x bins rows —
+        # bounded only by the CALLER's contract, which the helper
+        # cannot verify without an extra action. AQE's runtime size
+        # check makes the broadcast decision instead (it still
+        # broadcasts the few-KB dimension case, and refuses — with a
+        # plannable fallback rather than a driver OOM — if a caller
+        # ever passes a data-sized key; r10 ADVICE).
+        cond = F.lit(True)
+        for k in keys:
+            cond = cond & F.col(k).eqNullSafe(F.col(f"__dr_k2_{k}"))
+        paired = counts.join(c2, cond).drop(
+            *[f"__dr_k2_{k}" for k in keys]
+        )
     else:
-        count_rows = counts.collect()
-        # The fold is bounded by contract: (len(cuts)+1) bins x a
-        # DIMENSION-bounded key domain. A data-sized partition_by
-        # (user_id, doc_id...) would make this collect data-sized — fail
-        # loudly with the fix named instead of grinding the driver OOM.
-        if len(count_rows) > _FOLD_GROUP_BOUND:
-            raise ValueError(
-                f"with_global_rank: {len(count_rows)} (key, bin) groups — "
-                "partition_by must be a dimension-bounded key (nations, "
-                "priorities, langs), never a data-sized one; for "
-                "per-entity ranks use an ordinary keyed window, which is "
-                "already parallel at that grain"
-            )
-
-        # Exact driver-side prefix fold per key group, ordered by bin id
-        # ("earlier" = smaller bin ascending, larger descending — bins
-        # count strictly-greater cuts: high values sit in high bin ids).
-        by_key: dict[tuple, list] = {}
-        for r in count_rows:
-            by_key.setdefault(tuple(r[k] for k in keys), []).append(r)
-        off_rows = []
-        for kv, rows in by_key.items():
-            rows.sort(key=lambda r: r[_PID], reverse=descending)
-            total = sum(r["__dr_cnt"] for r in rows)
-            tot_s = {
-                c: sum(
-                    (r[f"__dr_sum_{c}"] or decimal.Decimal(0) for r in rows),
-                    decimal.Decimal(0),
-                )
-                for c in cum_cols
-            }
-            run_n = 0
-            run_s = {c: decimal.Decimal(0) for c in cum_cols}
-            for r in rows:
-                off_rows.append(
-                    (
-                        *kv,
-                        r[_PID],
-                        run_n,
-                        total,
-                        *[run_s[c] for c in cum_cols],
-                        *[tot_s[c] for c in cum_cols],
-                    )
-                )
-                run_n += r["__dr_cnt"]
-                for c in cum_cols:
-                    run_s[c] += r[f"__dr_sum_{c}"] or 0
-
-        from pyspark.sql import types as T
-
-        key_fields = [df.schema[k] for k in keys]
-        schema = T.StructType(
-            [
-                *key_fields,
-                T.StructField(_PID, T.IntegerType(), False),
-                T.StructField("__dr_off", T.LongType(), False),
-                T.StructField(total_col, T.LongType(), False),
-                *[
-                    T.StructField(f"__dr_soff_{c}", T.DecimalType(38, 0), False)
-                    for c in cum_cols
-                ],
-                *[
-                    T.StructField(f"tot_{c}", T.DecimalType(38, 0), False)
-                    for c in cum_cols
-                ],
-            ]
-        )
-        offsets = df.sparkSession.createDataFrame(off_rows, schema)
+        paired = counts.crossJoin(F.broadcast(c2))
+    offsets = paired.groupBy(*keys, _PID).agg(*offset_aggs)
 
     order = [F.desc(value_col) if descending else F.asc(value_col)]
     order += [F.asc(t) for t in tiebreaks]
@@ -298,7 +210,7 @@ def with_global_rank(
     if keys:
         # Null-safe on the keys (NULL-key groups must keep their offsets)
         # and hint-free (AQE sizes the keyed relation at runtime) — same
-        # reasoning as the plan-mode pair join above.
+        # reasoning as the bin-pair join above.
         off2 = offsets.select(
             *[F.col(k).alias(f"__dr_ko_{k}") for k in keys],
             F.col(_PID).alias("__dr_pido"),

@@ -135,19 +135,22 @@ def eval_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("n_chars").alias("x"),
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("y"),
-        # narrow doc-grain projection feeds the quantile action + two
-        # driver-fold rank passes + the final plan; checkpointing it
-        # runs the text tokenization ONCE instead of four times (r11).
+        # narrow doc-grain projection feeds the quantile action, the
+        # first rank level and the final plan; checkpointing it runs
+        # the text tokenization ONCE instead of four times (r11).
     ).localCheckpoint(eager=False)
     cuts = quantile_cuts(base, ["x", "y"])
+    # Nested ranks: a lazy checkpoint after each level keeps the next
+    # level's two plan consumers (window + offsets) from re-running the
+    # one below (SCALE.md multi-consumer rule, as in q_customer_rfm).
+    ranked_x = with_global_rank(
+        base, "x", ["doc_id"], cuts=cuts["x"],
+        partition_by=["lang"], rank_col="__rx", total_col="__nx",
+    ).localCheckpoint(eager=False)
     two_ranked = with_global_rank(
-        with_global_rank(
-            base, "x", ["doc_id"], cuts=cuts["x"], fold="driver",
-            partition_by=["lang"], rank_col="__rx", total_col="__nx",
-        ),
-        "y", ["doc_id"], cuts=cuts["y"], fold="driver",  # nested ranks
+        ranked_x, "y", ["doc_id"], cuts=cuts["y"],
         partition_by=["lang"], rank_col="__ry", total_col="__ny",
-    )
+    ).localCheckpoint(eager=False)
     ranked = two_ranked.select(
         "lang", (F.col("__rx") - F.col("__ry")).cast("bigint").alias("d")
     )

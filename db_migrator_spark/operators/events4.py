@@ -783,14 +783,17 @@ def q_rfm_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sites where it won; BENCH_NOTES round-11).
     )
     cuts = quantile_cuts(per_cust, ["r1", "r2"])
+    # Nested ranks: a lazy checkpoint after each level keeps the next
+    # level's two plan consumers (window + offsets) from re-running the
+    # one below (SCALE.md multi-consumer rule, as in q_customer_rfm).
     ranked = with_global_rank(
         per_cust, "r1", ["o_custkey"], cuts=cuts["r1"],
-        rank_col="__rn_pre", total_col="__n_pre", fold="driver",
-    )
+        rank_col="__rn_pre", total_col="__n_pre",
+    ).localCheckpoint(eager=False)
     ranked = with_global_rank(
         ranked, "r2", ["o_custkey"], cuts=cuts["r2"],
-        rank_col="__rn_post", total_col="__n_post", fold="driver",
-    )
+        rank_col="__rn_post", total_col="__n_post",
+    ).localCheckpoint(eager=False)
     scored = ranked.select(
         "o_custkey",
         ntile_expr("__rn_pre", "__n_pre", 5).alias("q_pre"),

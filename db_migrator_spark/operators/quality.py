@@ -637,23 +637,22 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "frequency",
         "monetary_micros",
-        # customer-grain aggregate feeds the quantile action plus three
-        # driver-fold rank passes (each a collect over it) plus the
-        # final plan — checkpoint so the orders groupBy+join runs once
-        # (r11; entity-grain only, never raw-scan-grain).
+        # customer-grain aggregate feeds the quantile action plus the
+        # first rank level (window and offset sides) plus the final
+        # plan — checkpoint so the orders groupBy+join runs once (r11;
+        # entity-grain only, never raw-scan-grain).
     ).localCheckpoint(eager=False)
 
     cuts = quantile_cuts(
         based, ["recency_days", "frequency", "monetary_micros"]
     )
-    # Round 13: per-LEVEL lazy checkpoints + plan-mode folds replace the
-    # r11 driver folds (SCALE.md case 3 applied to nesting): each rank
-    # level's output is entity-grain and feeds the next level TWICE
-    # (window side + offset side), so checkpointing every level caps the
-    # lineage at one materialization per level, and the driver fold's
-    # three collect round-trips (each re-running the levels below it)
-    # disappear. Interleaved A/B at sf0.1: 5.12 -> 3.07s min-of-mins,
-    # new <= old 3/3 pairs (BENCH_NOTES round-13c).
+    # Nested ranks (SCALE.md multi-consumer rule): each rank level's
+    # output is entity-grain and feeds the next level TWICE (window side
+    # + offset side), so a lazy checkpoint after every level caps the
+    # lineage at one materialization per level. Round 13 replaced three
+    # driver-side offset folds (each a collect re-running the levels
+    # below it) with this shape: interleaved A/B at sf0.1, 5.12 -> 3.07s
+    # min-of-mins, new <= old 3/3 pairs (BENCH_NOTES round-13c).
     ranked = based
     for col, desc, tag in (
         ("recency_days", False, "r"),
@@ -663,7 +662,7 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked = with_global_rank(
             ranked, col, ["o_custkey"], cuts=cuts[col], descending=desc,
             rank_col=f"__rn_{tag}", total_col=f"__n_{tag}",
-            partition_by=["c_nationkey"], fold="plan",
+            partition_by=["c_nationkey"],
         ).localCheckpoint(eager=False)
     scored = ranked.select(
         "c_nationkey",

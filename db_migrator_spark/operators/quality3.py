@@ -376,7 +376,7 @@ def q_weighted_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = with_global_rank(
         cells, "v", [], cuts=cuts,
         partition_by=["l_returnflag"], rank_col="__rk",
-        total_col="n_values", cum_cols=("w",), fold="plan",
+        total_col="n_values", cum_cols=("w",),
     )
     return (
         cum.groupBy("l_returnflag")

@@ -283,7 +283,7 @@ def q_ntile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays within a bin and global rank is exact.
 
     Round 10: this op's hand-rolled pattern became
-    ``operators.distributed_rank`` (driver-folded offsets, closed-form
+    ``operators.distributed_rank`` (exact per-bin offsets, closed-form
     integer NTILE, keyed variant) — the implementation now delegates to
     the shared helper so the repo carries the pattern exactly once; the
     plan shape this docstring describes is unchanged (asserted by

@@ -81,7 +81,7 @@ def q_ks_drift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = with_global_rank(
         cells, "v", [], cuts=cuts,
         partition_by=["o_orderpriority"], rank_col="__rk",
-        total_col="__nv", cum_cols=("c1", "c2"), fold="plan",
+        total_col="__nv", cum_cols=("c1", "c2"),
     )
     return (
         cum.groupBy("o_orderpriority")
@@ -217,7 +217,7 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = with_global_rank(
         cells, "v", [], cuts=ccuts,
         partition_by=["o_orderpriority"], rank_col="__rk",
-        total_col="__nv", cum_cols=("cnt",), fold="plan",
+        total_col="__nv", cum_cols=("cnt",),
     )
     median = (
         cum.filter(F.expr("cum_cnt >= (tot_cnt + 1) div 2"))

@@ -86,7 +86,7 @@ def q_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = with_global_rank(
         cells2, "v", [], cuts=cuts,
         partition_by=["o_orderpriority"], rank_col="__rk",
-        total_col="__nv", cum_cols=("t",), fold="plan",
+        total_col="__nv", cum_cols=("t",),
     ).select(
         "o_orderpriority",
         "c1",

@@ -20,3 +20,23 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def built_queries(spark):
+    """``build(name, sf_dir)``: the declared query's DataFrame, built at
+    most once per (name, sf_dir) in the test session. The whole-surface
+    plan and schema audits share it, so each query's construction
+    (including any eager jobs it runs while building) happens once
+    instead of once per audit."""
+    import __spark_entry__ as em
+
+    qs = em.queries()
+    built = {}
+
+    def build(name, sf_dir):
+        if (name, sf_dir) not in built:
+            built[name, sf_dir] = qs[name](spark, sf_dir)
+        return built[name, sf_dir]
+
+    return build

@@ -29,15 +29,12 @@ def _fixture(spark):
 
 
 def test_global_rank_and_cumsum_match_window(spark):
-    import itertools
-
     df = _fixture(spark)
     cuts = quantile_cuts(df, ["v"], n_bins=8)["v"]
-    mode_tot = {}
-    for desc, fold in itertools.product((False, True), ("plan", "driver")):
+    true_tot = df.select(F.sum("amt")).first()[0]
+    for desc in (False, True):
         got = with_global_rank(
-            df, "v", ["k"], cuts=cuts, descending=desc, cum_cols=("amt",),
-            fold=fold,
+            df, "v", ["k"], cuts=cuts, descending=desc, cum_cols=("amt",)
         )
         order = [F.desc("v") if desc else F.asc("v"), F.asc("k")]
         w = W.orderBy(*order)
@@ -55,22 +52,17 @@ def test_global_rank_and_cumsum_match_window(spark):
                 | (F.col("cum_amt") != F.col("cum_ref"))
             ).count()
             == 0
-        ), (desc, fold)
+        ), desc
         assert got.select(F.max("n_total")).first()[0] == 997
         tots = {r[0] for r in got.select("tot_amt").distinct().collect()}
-        assert len(tots) == 1
-        mode_tot[(desc, fold)] = next(iter(tots))
-    # plan and driver modes must agree with each other AND the true sum
-    true_tot = df.select(F.sum("amt")).first()[0]
-    assert set(mode_tot.values()) == {true_tot}, mode_tot
+        assert tots == {true_tot}, (desc, tots)
 
 
 def test_keyed_rank_matches_partitioned_window(spark):
     df = _fixture(spark)
     cuts = quantile_cuts(df, ["v"], n_bins=8)["v"]
     got = with_global_rank(
-        df, "v", ["k"], cuts=cuts, descending=True, partition_by=["g"],
-        fold="driver",
+        df, "v", ["k"], cuts=cuts, descending=True, partition_by=["g"]
     )
     w = W.partitionBy("g").orderBy(F.desc("v"), F.asc("k"))
     want = df.select("k", F.row_number().over(w).alias("rn_ref"))
@@ -87,7 +79,7 @@ def test_keyed_rank_matches_partitioned_window(spark):
 
 
 def test_keyed_plan_mode_with_cum_matches_window(spark):
-    """The keyed + fold='plan' + cum_cols path — exactly what the
+    """The keyed + cum_cols path — exactly what the
     production share-of-total queries use (q_abc_classification,
     eval_average_precision) — must match the partitioned window's rank,
     running sum, and group total."""
@@ -95,7 +87,7 @@ def test_keyed_plan_mode_with_cum_matches_window(spark):
     cuts = quantile_cuts(df, ["v"], n_bins=8)["v"]
     got = with_global_rank(
         df, "v", ["k"], cuts=cuts, descending=True, partition_by=["g"],
-        cum_cols=("amt",), fold="plan",
+        cum_cols=("amt",),
     )
     w = W.partitionBy("g").orderBy(F.desc("v"), F.asc("k"))
     want = df.select(
@@ -124,17 +116,13 @@ def test_null_values_rank_like_window(spark):
     defaults (the round-10 review's confirmed silent-drop bug)."""
     rows = [(1, 10), (2, None), (3, 5), (4, None), (5, 7)]
     df = spark.createDataFrame(rows, "k long, v long")
-    for desc, fold in (
-        (False, "plan"), (False, "driver"), (True, "plan"), (True, "driver")
-    ):
-        got = with_global_rank(
-            df, "v", ["k"], cuts=[6.0], descending=desc, fold=fold
-        )
-        assert got.count() == 5, (desc, fold)  # nothing dropped
+    for desc in (False, True):
+        got = with_global_rank(df, "v", ["k"], cuts=[6.0], descending=desc)
+        assert got.count() == 5, desc  # nothing dropped
         order = [F.desc("v") if desc else F.asc("v"), F.asc("k")]
         want = df.select("k", F.row_number().over(W.orderBy(*order)).alias("r"))
         bad = got.join(want, "k").filter(F.col("rn") != F.col("r")).count()
-        assert bad == 0, (desc, fold)
+        assert bad == 0, desc
 
 
 def test_ntile_expr_matches_builtin_ntile(spark):
@@ -161,8 +149,9 @@ def test_no_unpartitioned_window_in_helper_plan(spark):
 
 def test_property_rank_matches_window_on_random_data(spark):
     """Hypothesis sweep: arbitrary tie-heavy integer data, random bin
-    counts, both directions, keyed and global — the helper's rank must
-    equal row_number() over the equivalent window every time."""
+    counts, both directions, keyed and global, single and nested (rank
+    -> lazy checkpoint -> rank) — the helper's ranks must equal
+    row_number() over the equivalent windows every time."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -178,79 +167,74 @@ def test_property_rank_matches_window_on_random_data(spark):
         n_bins=st.integers(min_value=1, max_value=9),
         desc=st.booleans(),
         keyed=st.booleans(),
-        fold=st.sampled_from(["plan", "driver"]),
+        nested=st.booleans(),
     )
-    def run(vals, n_bins, desc, keyed, fold):
+    def run(vals, n_bins, desc, keyed, nested):
         df = spark.createDataFrame(
-            [(i, v, i % 3) for i, v in enumerate(vals)], "k long, v long, g long"
+            [(i, v, i % 3, v * 7 % 13) for i, v in enumerate(vals)],
+            "k long, v long, g long, w long",
         )
-        cuts = quantile_cuts(df, ["v"], n_bins=n_bins)["v"]
+        cuts = quantile_cuts(df, ["v", "w"], n_bins=n_bins)
         keys = ["g"] if keyed else []
+        spec = W.partitionBy(*keys) if keys else W
         got = with_global_rank(
-            df, "v", ["k"], cuts=cuts, descending=desc, partition_by=keys,
-            fold=fold,
+            df, "v", ["k"], cuts=cuts["v"], descending=desc, partition_by=keys
         )
         order = [F.desc("v") if desc else F.asc("v"), F.asc("k")]
-        w = (W.partitionBy(*keys) if keys else W).orderBy(*order)
-        want = df.select("k", F.row_number().over(w).alias("rn_ref"))
-        assert (
-            got.join(want, "k").filter(F.col("rn") != F.col("rn_ref")).count()
-            == 0
+        want = df.select(
+            "k", F.row_number().over(spec.orderBy(*order)).alias("rn_ref")
         )
+        bad = F.col("rn") != F.col("rn_ref")
+        if nested:
+            # Second rank over the checkpointed first level, opposite
+            # direction, against the second window over the raw input.
+            got = with_global_rank(
+                got.localCheckpoint(eager=False), "w", ["k"],
+                cuts=cuts["w"], descending=not desc, partition_by=keys,
+                rank_col="rn2", total_col="n2",
+            )
+            order2 = [F.asc("w") if desc else F.desc("w"), F.asc("k")]
+            want = want.join(
+                df.select(
+                    "k",
+                    F.row_number().over(spec.orderBy(*order2)).alias("rn2_ref"),
+                ),
+                "k",
+            )
+            bad = bad | (F.col("rn2") != F.col("rn2_ref"))
+        assert got.count() == len(vals)
+        assert got.join(want, "k").filter(bad).count() == 0
 
     run()
-
-
-def test_data_sized_partition_by_fails_loudly(spark):
-    """A data-sized partition_by must raise the contract error, not
-    OOM the driver fold."""
-    import pytest as _pytest
-
-    from db_migrator_spark.operators import distributed_rank as dr
-
-    df = spark.range(0, 3000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("v"), F.col("id").alias("ent")
-    )
-    import unittest.mock as mock
-
-    with mock.patch.object(dr, "_FOLD_GROUP_BOUND", 1000):
-        with _pytest.raises(ValueError, match="dimension-bounded"):
-            dr.with_global_rank(
-                df, "v", ["k"], cuts=[1.0, 3.0], partition_by=["ent"],
-                fold="driver",
-            )
 
 
 def test_keyed_rank_keeps_null_key_groups(spark):
     """r10 ADVICE: a NULL partition key is a real group under a keyed
     window (NULLs group together); the offsets equi-joins must be
     null-safe or those rows silently vanish. Pin bit-exact parity with
-    the keyed window on a fixture whose key column contains NULLs, in
-    both fold modes."""
+    the keyed window on a fixture whose key column contains NULLs."""
     df = _fixture(spark).withColumn(
         "gn", F.when(F.col("g") == 2, None).otherwise(F.col("g"))
     )
     cuts = quantile_cuts(df, ["v"], n_bins=8)["v"]
-    for fold in ("plan", "driver"):
-        got = with_global_rank(
-            df, "v", ["k"], cuts=cuts, partition_by=["gn"],
-            cum_cols=("amt",), fold=fold,
+    got = with_global_rank(
+        df, "v", ["k"], cuts=cuts, partition_by=["gn"], cum_cols=("amt",)
+    )
+    assert got.count() == df.count(), "rows dropped"
+    w = W.partitionBy("gn").orderBy(F.asc("v"), F.asc("k"))
+    want = df.select(
+        "k",
+        F.row_number().over(w).alias("rn_ref"),
+        F.sum(F.col("amt").cast("decimal(38,0)"))
+        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
+        .alias("cum_ref"),
+    )
+    bad = (
+        got.join(want, "k")
+        .filter(
+            (F.col("rn") != F.col("rn_ref"))
+            | (F.col("cum_amt") != F.col("cum_ref"))
         )
-        assert got.count() == df.count(), f"rows dropped (fold={fold})"
-        w = W.partitionBy("gn").orderBy(F.asc("v"), F.asc("k"))
-        want = df.select(
-            "k",
-            F.row_number().over(w).alias("rn_ref"),
-            F.sum(F.col("amt").cast("decimal(38,0)"))
-            .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-            .alias("cum_ref"),
-        )
-        bad = (
-            got.join(want, "k")
-            .filter(
-                (F.col("rn") != F.col("rn_ref"))
-                | (F.col("cum_amt") != F.col("cum_ref"))
-            )
-            .count()
-        )
-        assert bad == 0, f"keyed NULL-group mismatch (fold={fold})"
+        .count()
+    )
+    assert bad == 0, "keyed NULL-group mismatch"

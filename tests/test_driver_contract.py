@@ -27,31 +27,6 @@ qs = e.queries()
 for key in ("q_grouped_mad", "events_tumbling_hourly", "q1_pricing_summary"):
     n = qs[key](spark, "/root/testdata/sf0.001").count()
     assert n > 0, key
-# the in-driver capture (db_migrator_spark/diagnostics.py) must work from
-# a foreign cwd under a vanilla session — that is exactly how the external
-# driver would execute it if a query ever reds again. The red set is empty
-# as of r9, so exercise maybe_capture directly; the output goes to a TEMP
-# path (never the shared repo artifact — ADVICE r9 #4).
-import json, os, tempfile
-os.environ.pop("SPARK_GRAFT_NO_DIAG", None)  # capture must be live here
-diag_out = os.path.join(tempfile.mkdtemp(prefix="diagprobe"), "diag.json")
-os.environ["SPARK_GRAFT_DIAG_OUT"] = diag_out
-from db_migrator_spark.diagnostics import maybe_capture
-import __spark_entry__ as _e
-_oracles = _e.oracle_sql()
-_df = qs["events_dow_seasonality"](spark, "/root/testdata/sf0.001")
-maybe_capture("events_dow_seasonality", _df, spark,
-              "/root/testdata/sf0.001",
-              _oracles["events_dow_seasonality"])
-diag = json.load(open(diag_out))
-rec = diag.get("events_dow_seasonality@sf0.001")
-assert rec and rec.get("spark", {}).get("hash"), sorted(diag)
-assert rec["env"].get("pyspark"), rec["env"]
-assert rec["spark"]["hash"] == rec["oracle_current"]["hash"], rec
-# the sf bound must hold: a 10x dir parses to sf > 0.011 and skips.
-maybe_capture("events_dow_seasonality", _df, spark, "/tmp/sf1",
-              _oracles["events_dow_seasonality"])
-assert "events_dow_seasonality@sf1" not in json.load(open(diag_out))
 print("PROBE_OK")
 """
 

@@ -23,23 +23,12 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 SF = "/root/testdata/sf0.001"
 
 # Queries whose construction executes Spark jobs (driver-side folds /
 # collected sidecars) — schema analysis still works, just slower; listed
 # here only so a future skip decision has the inventory in one place.
 _EXECUTES_ON_BUILD = {"embedding_pca_power"}
-
-
-@pytest.fixture(scope="module")
-def pairs(spark):
-    import __spark_entry__ as em
-
-    qs = em.queries()
-    oracles = em.oracle_sql()
-    return qs, oracles
 
 
 def _split_statements(sql: str) -> list[str]:
@@ -89,12 +78,14 @@ def _duck_types(con, sql: str) -> dict[str, str]:
     }
 
 
-def test_no_asymmetric_oracle_output_types(spark, pairs):
+def test_no_asymmetric_oracle_output_types(built_queries):
     import duckdb
 
+    import __spark_entry__ as em
     from db_migrator_spark.io import TABLES
 
-    qs, oracles = pairs
+    qs = em.queries()
+    oracles = em.oracle_sql()
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF}/{t}.parquet"
@@ -113,7 +104,7 @@ def test_no_asymmetric_oracle_output_types(spark, pairs):
             continue
         stypes = {
             f.name: f.dataType.simpleString()
-            for f in qs[name](spark, SF).schema.fields
+            for f in built_queries(name, SF).schema.fields
         }
         for col, dt in dtypes.items():
             if dt == "HUGEINT":

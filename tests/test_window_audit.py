@@ -51,10 +51,10 @@ BOUNDED_DOMAIN_WHITELIST = {
 }
 
 
-def _queries():
+def _audited_names():
     import __spark_entry__ as e
 
-    out = {}
+    out = []
     for modname in e._MODULES:
         if ".streaming." in modname:
             continue
@@ -62,7 +62,7 @@ def _queries():
             mod = importlib.import_module(modname)
         except ModuleNotFoundError:
             continue
-        out.update(getattr(mod, "QUERIES", {}))
+        out.extend(getattr(mod, "QUERIES", {}))
     return out
 
 
@@ -136,7 +136,7 @@ KEYED_WINDOW_WHITELIST: dict[str, str] = {
 }
 
 
-def test_no_unjustified_constant_domain_keyed_window(spark):
+def test_no_unjustified_constant_domain_keyed_window(built_queries):
     """Tier-2 audit (VERDICT r10 next-step #2): fail on any window whose
     partition spec is entirely constant-domain dimension columns over a
     non-constant-bounded input, unless whitelisted with a reason. This is
@@ -146,8 +146,10 @@ def test_no_unjustified_constant_domain_keyed_window(spark):
 
     offenders = {}
     stale = dict(KEYED_WINDOW_WHITELIST)
-    for name, fn in _queries().items():
-        bad = constant_domain_keyed_windows(fn(spark, SF), CONSTANT_DOMAIN_COLS)
+    for name in _audited_names():
+        bad = constant_domain_keyed_windows(
+            built_queries(name, SF), CONSTANT_DOMAIN_COLS
+        )
         if not bad:
             continue
         if name in stale:
@@ -162,13 +164,13 @@ def test_no_unjustified_constant_domain_keyed_window(spark):
     assert not stale, f"stale keyed-window whitelist entries: {stale}"
 
 
-def test_no_query_has_unbounded_global_window(spark):
+def test_no_query_has_unbounded_global_window(built_queries):
     from db_migrator_spark.plans.inspect import unbounded_global_windows
 
     offenders = {}
     stale_whitelist = dict(BOUNDED_DOMAIN_WHITELIST)
-    for name, fn in _queries().items():
-        bad = unbounded_global_windows(fn(spark, SF))
+    for name in _audited_names():
+        bad = unbounded_global_windows(built_queries(name, SF))
         if not bad:
             continue
         if name in stale_whitelist:

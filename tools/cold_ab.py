@@ -15,15 +15,13 @@ Prints per-sample minima and the min/median/max across samples.
 from __future__ import annotations
 
 import json
-import os
 import statistics
 import subprocess
 import sys
 
 _CHILD = r"""
-import json, os, sys, time
+import json, sys, time
 sys.path.insert(0, "/root/repo")
-os.environ.setdefault("SPARK_GRAFT_NO_DIAG", "1")
 name, sf_dir = sys.argv[1], sys.argv[2]
 import __spark_entry__ as em
 from db_migrator_spark.session import get_spark

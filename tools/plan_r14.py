@@ -13,7 +13,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_NO_DIAG", "1")
 
 
 def main() -> None:

@@ -77,7 +77,7 @@ def main() -> None:
             ranked = with_global_rank(
                 ranked, col, ["o_custkey"], cuts=cuts[col], descending=desc,
                 rank_col=f"__rn_{tag}", total_col=f"__n_{tag}",
-                partition_by=["c_nationkey"], fold="plan",
+                partition_by=["c_nationkey"],
             ).localCheckpoint(eager=False)
             ranked.write.format("noop").mode("overwrite").save()
             level_times.append(time.perf_counter() - t0)

@@ -12,12 +12,10 @@ writes a JSON {name: sec} table sorted descending.
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
 sys.path.insert(0, "/root/repo")
-os.environ.setdefault("SPARK_GRAFT_NO_DIAG", "1")
 
 
 def main() -> None:

@@ -95,7 +95,6 @@ def main() -> int:
     n_first = int(rest[0]) if len(rest) == 1 and rest[0].isdigit() else 50
     names_only = set() if not rest or rest[0].isdigit() else set(rest)
 
-    os.environ.setdefault("SPARK_GRAFT_NO_DIAG", "1")
     import duckdb
 
     import __spark_entry__ as em
