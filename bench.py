@@ -225,8 +225,10 @@ def _resolve_sf1_dir(sf_dir: str, sf: float | None) -> str | None:
                   "directory; skipping sf1 group", file=sys.stderr)
             return None
         return env
-    if sf != 0.1:
-        return None  # group is defined relative to the driver bench SF
+    if sf != 0.1:  # group is defined relative to the driver bench SF
+        print(f"# sf1 group skipped: it is staged from an sf0.1 input, "
+              f"not {sf_dir!r}", file=sys.stderr)
+        return None
     import shutil
     import subprocess
     import tempfile

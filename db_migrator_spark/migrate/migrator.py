@@ -23,7 +23,9 @@ Control-flow semantics mirror ``/root/reference/src/migrate/migrator.rs`` and
 The per-table data path is where Spark replaces the reference wholesale:
 ``read_table -> cast plan + snake_case rename -> write_table`` is a single
 declarative plan per table — partition-parallel scan and write, no
-driver-side row handling (SURVEY.md §3.4).
+driver-side row handling (SURVEY.md §3.4). Rows are counted as the
+reference counts them, in the table migrator (table_migrator.rs:161-166):
+an ``Observation`` on the cast-plan DataFrame, fired by the sink's write.
 
 Scale: table-level parallelism multiplies Spark's intra-table parallelism;
 on a cluster, run with scheduler pools (one job group per table) and set
@@ -36,7 +38,7 @@ import logging
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..common.naming import format_snake_case
 from ..common.schema import TargetColumn
@@ -218,7 +220,11 @@ class DatabaseMigrator:
 
         df = self.extractor.read_table(source_table)
         df = self._apply_cast_plan(df, source_schema, target_schema)
-        rows_migrated = self.inserter.write_table(df, out_table, target_schema)
+        written = Observation()
+        self.inserter.write_table(
+            df.observe(written, F.count(F.lit(1)).alias("rows")), out_table, target_schema
+        )
+        rows_migrated = written.get["rows"]
         log.info("Migrated %s -> %s (%d rows)", source_table, out_table, rows_migrated)
         return MigrationResult(
             table_name=out_table,

@@ -12,9 +12,8 @@ Semantics mirror ``/root/reference/src/migrate/table_schema_mapper.rs:13-117``:
 - unsigned/zerofill come from the rule;
 - FK targets are snake_cased when formatting is on.
 
-Also provides the Spark side the reference doesn't need: the cast plan
-(list of Column expressions) and the ``createTableColumnTypes`` DDL string
-for the JDBC writer.
+Also provides the Spark side the reference doesn't need: the Spark type
+each mapped column is cast to in flight (``spark_cast_type``).
 """
 
 from __future__ import annotations
@@ -145,8 +144,3 @@ def spark_cast_type(t: MySqlType) -> str:
         # Spark has no unsigned; decimal(20,0) holds the full u64 range.
         return "decimal(20,0)"
     return _SPARK_CAST[t.base_type]
-
-
-def create_table_column_types(columns: list[TargetColumn]) -> str:
-    """Value for the JDBC writer's ``createTableColumnTypes`` option."""
-    return ", ".join(f"{c.column_name} {c.data_type.to_sql()}" for c in columns)

@@ -28,8 +28,10 @@ class Inserter(Protocol):
 
     def create_table(self, table: str, schema: list[TargetColumn]) -> None: ...
 
-    def write_table(self, df: DataFrame, table: str, schema: list[TargetColumn]) -> int:
-        """Append df's rows; returns rows written."""
+    def write_table(self, df: DataFrame, table: str, schema: list[TargetColumn]) -> None:
+        """Append df's rows by running ``df`` in exactly one action: the
+        migrator counts the rows with an observation on ``df`` and waits
+        for that action to fire it."""
         ...
 
     def create_constraints(self, table: str, schema: list[TargetColumn],

@@ -13,7 +13,7 @@ sides of the recurring join must use the same count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -28,7 +28,3 @@ def write_bucketed(
     if sort_by:
         writer = writer.sortBy(*sort_by)
     writer.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -19,9 +19,8 @@ SQL-surface-tested only — but the wire protocol itself (FK-bracketed
 transaction, rollback-with-preview, best-effort constraints) is factored
 into ``sinks/dbapi_sink.py`` and fully tested there: statement ordering
 against a recording fake connection, and end-to-end through
-``df.foreachPartition`` into sqlite3 (a real PEP 249 driver). On a
-cluster with a MySQL DB-API driver, ``dbapi_sink.partition_writer`` is
-the data path: one connection + one transaction per partition.
+``df.foreachPartition`` into sqlite3 (a real PEP 249 driver). This sink
+does not use it: its data path is the JDBC writer above.
 """
 
 from __future__ import annotations
@@ -137,7 +136,7 @@ class MySqlJdbcInserter:
     def create_table(self, table: str, schema: list[TargetColumn]) -> None:
         self._execute(ddl.build_create_table_query(table, schema))
 
-    def write_table(self, df: DataFrame, table: str, schema: list[TargetColumn]) -> int:
+    def write_table(self, df: DataFrame, table: str, schema: list[TargetColumn]) -> None:
         (
             df.write.format("jdbc")
             .option("url", self.url)
@@ -152,7 +151,6 @@ class MySqlJdbcInserter:
             .mode("append")
             .save()
         )
-        return self.table_rows_count(table)
 
     def create_constraints(self, table: str, schema: list[TargetColumn],
                            migrated_tables: list[str]) -> None:

@@ -8,7 +8,7 @@ key; controlled file counts avoid the small-file problem.
 ``write_partitioned`` = repartition on the partition columns (one shuffle,
 one file per partition-dir per task) + ``sortWithinPartitions`` +
 ``partitionBy``. The reader-side payoff (partition pruning) is asserted in
-tests/test_layout.py.
+tests/test_skew_layout.py.
 """
 
 from __future__ import annotations
@@ -49,12 +49,6 @@ def write_partitioned(
     if drop_cols:
         out = out.drop(*drop_cols)
     out.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-
-
-def read_partition_pruned(spark: SparkSession, path: str) -> DataFrame:
-    """Read back a partitioned dataset (partition columns become virtual
-    columns; filters on them prune directories before any IO)."""
-    return spark.read.parquet(path)
 
 
 def compact_dataset(

@@ -72,10 +72,9 @@ class ParquetInserter:
         self._record(ddl.build_create_table_query(table, schema))
         os.makedirs(self._path(table), exist_ok=True)
 
-    def write_table(self, df: DataFrame, table: str, schema: list[TargetColumn]) -> int:
+    def write_table(self, df: DataFrame, table: str, schema: list[TargetColumn]) -> None:
         self._record(ddl.build_insert_statement(table, schema))
         df.write.mode("append").parquet(self._path(table))
-        return self.spark.read.parquet(self._path(table)).count()
 
     def create_constraints(self, table: str, schema: list[TargetColumn],
                            migrated_tables: list[str]) -> None:

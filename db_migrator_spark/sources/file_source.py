@@ -55,7 +55,7 @@ class FileExtractor(ParquetExtractor):
     def fetch_tables(self) -> list[str]:
         return sorted(self._catalog)
 
-    def read_table(self, table: str) -> DataFrame:
+    def _load(self, table: str) -> DataFrame:
         fname = self._catalog.get(table, f"{table}.parquet")
         path = os.path.join(self.source_dir, fname)
         fmt = _FORMATS[os.path.splitext(fname)[1]]

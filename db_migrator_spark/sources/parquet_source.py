@@ -53,6 +53,7 @@ class ParquetExtractor:
     def __init__(self, spark: SparkSession, source_dir: str):
         self.spark = spark
         self.source_dir = source_dir
+        self._frames: dict[str, DataFrame] = {}
 
     def fetch_tables(self) -> list[str]:
         return sorted(
@@ -88,4 +89,10 @@ class ParquetExtractor:
         return out
 
     def read_table(self, table: str) -> DataFrame:
+        # Resolved once per extractor: schema and scan share one inference.
+        if table not in self._frames:
+            self._frames[table] = self._load(table)
+        return self._frames[table]
+
+    def _load(self, table: str) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.source_dir, f"{table}.parquet"))

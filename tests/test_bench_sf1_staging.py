@@ -1,6 +1,7 @@
 """bench.py's sf1 input must neither go stale nor be skipped silently:
 a staged copy is rebuilt when its source changes, and a non-directory
-SPARK_GRAFT_SF1_DIR skips the sf1 group with a warning."""
+SPARK_GRAFT_SF1_DIR or a bench SF other than 0.1 skips the sf1 group
+with a reason on stderr."""
 
 from __future__ import annotations
 
@@ -13,6 +14,12 @@ def test_sf1_dir_env_not_a_directory_warns(monkeypatch, tmp_path, capsys):
     monkeypatch.setenv("SPARK_GRAFT_SF1_DIR", str(tmp_path / "missing"))
     assert bench._resolve_sf1_dir(str(tmp_path), 0.1) is None
     assert "is not a directory" in capsys.readouterr().err
+
+
+def test_sf1_group_skip_off_sf01_says_why(monkeypatch, tmp_path, capsys):
+    monkeypatch.delenv("SPARK_GRAFT_SF1_DIR", raising=False)
+    assert bench._resolve_sf1_dir(str(tmp_path), 0.01) is None
+    assert "sf1 group skipped" in capsys.readouterr().err
 
 
 def test_sf1_staging_restages_only_when_source_changes(

@@ -6,7 +6,7 @@ import pytest
 
 from db_migrator_spark.io import load_table
 from db_migrator_spark.plans import plan_string
-from db_migrator_spark.sinks.bucketing import read_table, write_bucketed
+from db_migrator_spark.sinks.bucketing import write_bucketed
 
 SF = "/root/testdata/sf0.001"
 
@@ -39,8 +39,8 @@ def no_broadcast(spark):
 
 
 def test_bucketed_join_has_no_shuffle(spark, bucketed, no_broadcast):
-    o = read_table(spark, "orders_b")
-    l = read_table(spark, "lineitem_b")
+    o = spark.table("orders_b")
+    l = spark.table("lineitem_b")
     joined = l.join(o, l.l_orderkey == o.o_orderkey).groupBy("o_orderstatus").count()
     plan = plan_string(joined)
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan

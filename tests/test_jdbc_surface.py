@@ -1,6 +1,7 @@
-"""JDBC source/sink surface tests (no live databases in this container):
+"""JDBC source/sink surface tests (no MSSQL or MySQL server here):
 query-text shape, option assembly, and URL handling are validated without
-opening connections (readers are lazy until .load())."""
+opening connections (readers are lazy until .load()). Spark's JDBC writer
+itself is exercised against embedded in-memory Derby."""
 
 from db_migrator_spark.config import DatabaseConfig
 from db_migrator_spark.sources.jdbc_source import (
@@ -62,3 +63,25 @@ def test_mysql_sink_url_gets_rewrite_flag(spark):
     assert "rewriteBatchedStatements=true" in ins.url
     ins2 = MySqlJdbcInserter(spark, "jdbc:mysql://h:3306/db?x=1", "u", "p", "db")
     assert ins2.url.endswith("&rewriteBatchedStatements=true")
+
+
+def test_observation_fires_on_jdbc_write(spark):
+    """The migrator counts a table's rows with an observation on the
+    DataFrame a sink writes; for the JDBC sink that write is
+    ``format("jdbc")``. Pin that the observation fires with the exact row
+    count on such a write, here into an in-memory embedded Derby database
+    (its jar ships with pyspark)."""
+    from pyspark.sql import Observation, functions as F
+
+    obs = Observation()
+    df = spark.range(37).selectExpr("CAST(id AS INT) AS id", "CAST(id AS STRING) AS name")
+    (
+        df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.format("jdbc")
+        .option("url", "jdbc:derby:memory:observed_write;create=true")
+        .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+        .option("dbtable", "observed")
+        .mode("append")
+        .save()
+    )
+    assert obs.get == {"rows": 37}

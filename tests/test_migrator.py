@@ -294,3 +294,41 @@ def test_real_testdata_migration(spark, tmp_path):
     assert by_name["nation"].rows_migrated == 25
     got = spark.read.parquet(os.path.join(tgt, "customer"))
     assert set(got.columns) == {"c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"}
+
+
+def _jobs_started(spark, fn):
+    """Spark jobs started while ``fn`` runs, across the migrator's pool
+    threads (none of them sets a job group)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    result = fn()
+    return len(set(tracker.getJobIdsForGroup(None)) - before), result
+
+
+def test_one_parquet_table_runs_two_jobs(spark, tmp_path):
+    """One schema resolution and one write: the source is resolved once
+    per extractor and the rows are counted by observing the write, so
+    neither a second read of the source nor a read-back of the target
+    starts a job."""
+    src = str(tmp_path / "src")
+    write_source(spark, src, "Users", [(1, "a"), (2, "b"), (3, "c")], "id int, name string")
+    n, (results, _) = _jobs_started(spark, lambda: migrate(spark, src, str(tmp_path / "tgt")))
+    assert results[0].rows_migrated == 3
+    assert n == 2
+
+
+def test_one_csv_table_runs_three_jobs(spark, tmp_path):
+    """CSV through FileExtractor: the header/inference read (two jobs)
+    happens once, then the write."""
+    from db_migrator_spark.sources.file_source import FileExtractor
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "People.csv").write_text("PersonId,FullName\n1,Ada\n2,Edsger\n3,Grace\n")
+    inserter = ParquetInserter(spark, str(tmp_path / "tgt"))
+    migrator = DatabaseMigrator(
+        FileExtractor(spark, str(src)), inserter, options=MigrationOptions(all_tables=True)
+    )
+    n, results = _jobs_started(spark, migrator.run)
+    assert results[0].rows_migrated == 3
+    assert n == 3

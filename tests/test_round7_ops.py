@@ -1196,24 +1196,23 @@ def test_lead_time_percentiles_ordered_and_observed(spark):
 def test_leakage_audit_content_hash_is_clean_by_construction(spark):
     """The content-hash strategy must report ZERO straddling groups and
     zero contaminated docs at any corpus; the id-hash strategy's counts
-    bound them by the duplicate-group count."""
+    bound them by the duplicate-group count. Runs on sf0.1: its corpus
+    has duplicate groups that the id hash splits across train and eval,
+    where sf0.01 has none and would leave the id-hash bounds unchecked."""
     import os
-
-    import pytest
 
     from db_migrator_spark.operators.splits import corpus_split_leakage_audit
 
-    if not os.path.isdir("/tmp/sf1"):
-        pytest.skip("/tmp/sf1 not generated (run tools/make_sf1.py)")
-    rows = {r.strategy: r for r in corpus_split_leakage_audit(spark, "/tmp/sf1").collect()}
+    sf = os.path.join(os.path.dirname(SF01), "sf0.1")
+    rows = {r.strategy: r for r in corpus_split_leakage_audit(spark, sf).collect()}
     assert set(rows) == {"content_hash", "id_hash"}
     c, i = rows["content_hash"], rows["id_hash"]
     assert c.dup_groups == i.dup_groups  # same corpus, same dup structure
     assert c.straddling_groups == 0 and c.contaminated_eval_docs == 0
-    if i.dup_groups:  # replicated corpora manufacture cross-split dups
-        assert i.straddling_groups > 0
-        assert i.straddling_groups <= i.dup_groups
-        assert i.contaminated_eval_docs >= i.straddling_groups
+    assert i.dup_groups > 0
+    assert i.straddling_groups > 0
+    assert i.straddling_groups <= i.dup_groups
+    assert i.contaminated_eval_docs >= i.straddling_groups
 
 
 def test_global_percentiles_match_window_form(spark):

@@ -9,7 +9,6 @@ from db_migrator_spark.common.mysql_types import MySqlBaseType
 from db_migrator_spark.common.schema import ColumnSchema
 from db_migrator_spark.migrate.schema_mapper import (
     SchemaMappingError,
-    create_table_column_types,
     map_schema,
     spark_cast_type,
 )
@@ -126,15 +125,6 @@ def test_column_override_applies(registry):
     out = map_schema(registry, "Orders", [col("ID", MssqlType.INT, nullable=False)], True)
     assert out[0].data_type.to_sql() == "int unsigned"
     assert out[0].column_name == "id"
-
-
-def test_create_table_column_types(registry):
-    out = map_schema(
-        registry, "Users",
-        [col("id", MssqlType.INT, nullable=False), col("name", MssqlType.VARCHAR, length=100)],
-        False,
-    )
-    assert create_table_column_types(out) == "id int, name varchar(100)"
 
 
 def test_spark_cast_types(registry):

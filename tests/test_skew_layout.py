@@ -5,7 +5,7 @@ import pyspark.sql.functions as F
 from db_migrator_spark.io import load_table
 from db_migrator_spark.operators.skew import salted_join, two_phase_agg
 from db_migrator_spark.plans.inspect import plan_string
-from db_migrator_spark.sinks.layout import read_partition_pruned, write_partitioned
+from db_migrator_spark.sinks.layout import write_partitioned
 
 SF = "/root/testdata/sf0.01"
 
@@ -49,7 +49,7 @@ def test_partitioned_write_prunes(spark, tmp_path):
     orders = load_table(spark, SF, "orders")
     write_partitioned(orders, path, partition_by=["o_orderstatus"], sort_by=["o_orderdate"])
 
-    back = read_partition_pruned(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == orders.count()
 
     pruned = back.filter(F.col("o_orderstatus") == "F")
