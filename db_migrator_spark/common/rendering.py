@@ -1,4 +1,4 @@
-"""Per-cell value rendering + TDS wire-format decode helpers.
+"""SQL-literal rendering spec + TDS wire-format decode helpers.
 
 This is the reference's "expression layer" (SURVEY.md §2.2, V1-V15;
 ``/root/reference/src/extract/format.rs``). On the Spark engine the hot data
@@ -6,7 +6,10 @@ path never renders values — DataFrames stay natively typed and the JDBC
 writer binds parameters — so these pure functions exist for:
 
 - the optional byte-budget sink (``sinks/byte_budget.py``), which needs SQL
-  literals to assemble multi-row INSERT packets exactly like the reference;
+  literals to assemble multi-row INSERT packets exactly like the reference.
+  ``render_literal`` is the one spec of a literal there: the sink renders
+  whole Arrow columns at once where a test pins that form equal to it, and
+  calls it per value for the other types;
 - wire-semantic parity: MSSQL ``datetime`` stores 1/300-second fragments,
   ``time``/``datetime2`` store scaled increments, ``datetimeoffset`` is
   UTC-normalized with the offset *discarded* — the decode math here
@@ -58,13 +61,12 @@ def render_string(value: object | None) -> str:
 
 def render_decimal(value: Decimal | None) -> str:
     """V6: exact decimal quoted as a string literal, zero-padded to scale
-    (the reference renders via int/dec parts to dodge float round-trip)."""
+    (the reference renders via int/dec parts to dodge float round-trip).
+    ``str`` keeps the value's own scale and every digit; decimal context
+    arithmetic would raise past its 28-digit precision (decimal(38,s))."""
     if value is None:
         return NULL
-    sign, digits, exponent = value.as_tuple()
-    scale = max(0, -int(exponent))
-    q = value.quantize(Decimal(1).scaleb(-scale)) if scale else value
-    return f"'{q}'"
+    return f"'{value}'"
 
 
 def render_literal(value: object | None) -> str:

@@ -52,10 +52,12 @@ class ParquetInserter:
         return os.path.isdir(self._path(table))
 
     def table_rows_count(self, table: str) -> int:
-        try:
-            return self.spark.read.parquet(self._path(table)).count()
-        except Exception:
-            return 0  # directory exists but holds no dataset -> empty table
+        path = self._path(table)
+        # Spark skips ``_*`` and ``.*`` names; with no data file left the
+        # table is empty. Any other read error is real and propagates.
+        if all(name.startswith(("_", ".")) for name in os.listdir(path)):
+            return 0
+        return self.spark.read.parquet(path).count()
 
     def reset_tables(self, tables: list[str], action: TableAction) -> None:
         if not tables:

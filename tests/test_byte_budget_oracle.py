@@ -64,7 +64,7 @@ def _replay_and_compare(packets, create_sql, got_select, oracle_select):
 
 def test_customer_packets_replay_exactly(spark, tmp_path):
     packets = _collect_packets(spark, tmp_path, "customer")
-    assert packets and all(10 + len(p) <= 64_000 for p in packets)
+    assert packets and all(10 + len(p.encode()) <= 64_000 for p in packets)
     _replay_and_compare(
         packets,
         "CREATE TABLE customer (c_custkey BIGINT, c_name VARCHAR, "

@@ -125,6 +125,27 @@ def test_nonempty_target_is_error(spark, dirs):
         migrator.run()
 
 
+def test_unreadable_target_part_file_is_error(spark, dirs):
+    """A target holding one real row and one corrupt part file is not an
+    empty table: the row-count guard's read error fails the run instead of
+    letting the migrator append."""
+    src, tgt = dirs
+    write_source(spark, src, "Users", [(1, "a")], "id int, name string")
+    users = os.path.join(tgt, "Users")
+    spark.createDataFrame([(9, "x")], "id int, name string").coalesce(1).write.parquet(users)
+    with open(os.path.join(users, "part-99999-corrupt.snappy.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    before = sorted(os.listdir(users))
+    migrator = DatabaseMigrator(
+        ParquetExtractor(spark, src), ParquetInserter(spark, tgt),
+        options=MigrationOptions(format_names=False, all_tables=True),
+    )
+    migrator._reset_existing_targets = lambda tables: None  # keep the files in place
+    with pytest.raises(MigrationRunError):
+        migrator.run()
+    assert sorted(os.listdir(users)) == before  # nothing was appended
+
+
 def test_existing_empty_table_reused(spark, dirs):
     src, tgt = dirs
     write_source(spark, src, "Users", [(1, "a")], "id int, name string")
