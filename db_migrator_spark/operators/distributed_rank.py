@@ -27,23 +27,27 @@ Cost model: one extra pass over the input relation for the quantile
 cut-points (for an aggregate input that means re-running the aggregate —
 still fully parallel, and at 100 TB a recompute beats persisting a
 data-sized intermediate), then exactly one shuffle (the bin
-partitioning) per ranked ordering.
+partitioning) per ranked relation.
 
-Nested ranks (rank -> rank on the output) feed each level's output to
-two plan consumers (the rank window and the bin counts), so an
-unmaterialized chain re-runs its lineage 2^k times. Callers that nest
-put ``.localCheckpoint(eager=False)`` after every level
-(``quality.q_customer_rfm``; docs/SCALE.md multi-consumer rule).
+Several orderings of one relation (RFM's three dimensions, Spearman's
+two ranks) take one pass, never nested levels: :func:`with_global_ranks`
+stacks one row per (input row, ordering), ranks the stack with ONE
+quantile action and ONE ``with_global_rank`` keyed by the ordering tag,
+and folds the ranks back to one row per input row.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegralType
 from pyspark.sql.window import Window as W
 
 _PID = "__dr_pid"
+_TAG, _KEY, _NULL = "__dr_tag", "__dr_key", "__dr_null"
+_LONG_MAX = 2**63 - 1
 
 
 def quantile_cuts(
@@ -107,17 +111,21 @@ def with_global_rank(
     ranks use an ordinary keyed window, already parallel at that grain.
     """
     keys = list(partition_by)
-    bin_expr = F.lit(0)
-    for b in cuts:
-        bin_expr = bin_expr + (F.col(value_col) > F.lit(b)).cast("int")
+    # One SQL expression, not a Column chain: building the n_bins-term
+    # sum one F.col/F.lit/>/cast/+ at a time costs ~1,000 py4j round
+    # trips (250-380 ms) per call; parsing it costs under 1 ms. Double
+    # literals keep the comparison a double comparison, as F.lit(float)
+    # made it.
+    v = "`" + value_col.replace("`", "``") + "`"
+    bins = " + ".join(
+        ["0", *(f"CAST({v} > {_double_sql(b)} AS INT)" for b in cuts)]
+    )
     # NULL values get their own bin -1 so they are neither dropped by
     # the offsets equi-join nor mis-binned (NULL > cut is NULL): bin -1
     # is FIRST in ascending order and LAST in descending — exactly
     # Spark's window defaults (ASC NULLS FIRST / DESC NULLS LAST), so
     # rank parity with the window form holds on nullable values too.
-    bin_expr = (
-        F.when(F.col(value_col).isNull(), F.lit(-1)).otherwise(bin_expr)
-    )
+    bin_expr = F.expr(f"CASE WHEN {v} IS NULL THEN -1 ELSE {bins} END")
     # coalesce marks the bin NON-NULLABLE (the when-chain already never
     # returns NULL, but Catalyst can't see that): without it the offsets
     # equi-join infers isnotnull(_PID), the pushdown inlines the FULL
@@ -235,6 +243,92 @@ def with_global_rank(
         )
     return out.drop(
         _PID, "__dr_off", *[f"__dr_soff_{c}" for c in cum_cols]
+    )
+
+
+def with_global_ranks(
+    df: DataFrame,
+    orderings: Sequence[tuple[str, bool, str, str]],
+    tiebreaks: Sequence[str],
+    *,
+    partition_by: Sequence[str],
+) -> DataFrame:
+    """Rank several orderings of one relation in one pass: for each
+    ``(col, descending, rank_col, total_col)`` in ``orderings``, append
+    the exact 1-based row number ``rank_col`` over ``(col [DESC],
+    *tiebreaks ASC)`` within ``partition_by`` plus the group's row count
+    ``total_col`` — the ranks ``with_global_rank`` gives one ordering at
+    a time, and ``ROW_NUMBER() OVER (PARTITION BY keys ORDER BY col
+    [DESC], tiebreaks)`` gives under Spark's defaults (ASC NULLS FIRST,
+    DESC NULLS LAST).
+
+    1. Stack one row per (input row, ordering), tagged with the
+       ordering's index. The stacked key is the value cast to bigint;
+       a descending ordering uses ``bitwise_not(v)``, which reverses the
+       order and, unlike ``-v`` at ``Long.MIN``, cannot overflow. Its
+       NULLs take ``Long.MAX`` with a NULL flag that sorts them after
+       the real ``Long.MIN`` (whose key is also ``Long.MAX``), so they
+       rank after every real value; ascending NULLs keep a NULL key,
+       bin -1, first.
+    2. Take ONE ``quantile_cuts`` action on the stacked key.
+    3. Rank the stack with ONE ``with_global_rank`` keyed by
+       ``partition_by + [tag]``: the tag is a dimension key (one value
+       per ordering), so the keyed contract holds.
+    4. Fold the ranks back to one row per input row, grouped by
+       ``partition_by + tiebreaks``.
+
+    ``tiebreaks`` must identify a row within a ``partition_by`` group
+    (the fold groups on them). Every ordering column must be integral;
+    anything else raises ``TypeError``.
+    """
+    types = {f.name: f.dataType for f in df.schema.fields}
+    for col, *_ in orderings:
+        if not isinstance(types[col], IntegralType):
+            raise TypeError(
+                f"with_global_ranks orders integral columns only; "
+                f"{col} is {types[col].simpleString()}"
+            )
+    keys, ids = list(partition_by), [*partition_by, *tiebreaks]
+    legs = []
+    for i, (col, descending, _, _) in enumerate(orderings):
+        v = F.col(col).cast("bigint")
+        key = v
+        if descending:
+            key = F.coalesce(F.bitwise_not(v), F.lit(_LONG_MAX))
+        legs.append(
+            F.struct(
+                F.lit(i).alias(_TAG), key.alias(_KEY), v.isNull().alias(_NULL)
+            )
+        )
+    stacked = df.select(
+        *df.columns, F.explode(F.array(*legs)).alias("__dr_leg")
+    ).select(*df.columns, "__dr_leg.*")
+    cuts = quantile_cuts(stacked, [_KEY])[_KEY]
+    ranked = with_global_rank(
+        stacked, _KEY, [_NULL, *tiebreaks], cuts=cuts,
+        rank_col="__dr_rn", total_col="__dr_n", partition_by=[*keys, _TAG],
+    )
+    picks = []
+    for i, (_, _, rank_col, total_col) in enumerate(orderings):
+        mine = F.col(_TAG) == i
+        picks += [
+            F.max(F.when(mine, F.col("__dr_rn"))).alias(rank_col),
+            F.max(F.when(mine, F.col("__dr_n"))).alias(total_col),
+        ]
+    carried = [F.first(c).alias(c) for c in df.columns if c not in ids]
+    folded = ranked.groupBy(*ids).agg(*carried, *picks)
+    return folded.select(
+        *df.columns, *[c for _, _, r, t in orderings for c in (r, t)]
+    )
+
+
+def _double_sql(x: float) -> str:
+    """A Spark SQL double literal for ``x``."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    return "CAST('{}' AS DOUBLE)".format(
+        "NaN" if math.isnan(x) else ("-Infinity" if x < 0 else "Infinity")
     )
 
 

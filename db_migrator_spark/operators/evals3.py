@@ -125,9 +125,9 @@ def eval_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks) between n_chars and word count (module doc). Both ranks come
     from the keyed distributed exact-rank pattern (round 10: language
     partitions are docs/|langs| — linear, so the lang-keyed rank
-    windows were a |langs|-way parallelism ceiling); one quantile
-    action covers both orderings."""
-    from .distributed_rank import quantile_cuts, with_global_rank
+    windows were a |langs|-way parallelism ceiling); one stacked pass
+    (``with_global_ranks``) ranks both orderings."""
+    from .distributed_rank import with_global_ranks
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
@@ -136,21 +136,16 @@ def eval_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").alias("x"),
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("y"),
         # narrow doc-grain projection feeds the quantile action, the
-        # first rank level and the final plan; checkpointing it runs
-        # the text tokenization ONCE instead of four times (r11).
+        # rank's bin counts and the final plan; checkpointing it runs
+        # the text tokenization ONCE instead of once per consumer (r11).
     ).localCheckpoint(eager=False)
-    cuts = quantile_cuts(base, ["x", "y"])
-    # Nested ranks: a lazy checkpoint after each level keeps the next
-    # level's two plan consumers (window + offsets) from re-running the
-    # one below (SCALE.md multi-consumer rule, as in q_customer_rfm).
-    ranked_x = with_global_rank(
-        base, "x", ["doc_id"], cuts=cuts["x"],
-        partition_by=["lang"], rank_col="__rx", total_col="__nx",
-    ).localCheckpoint(eager=False)
-    two_ranked = with_global_rank(
-        ranked_x, "y", ["doc_id"], cuts=cuts["y"],
-        partition_by=["lang"], rank_col="__ry", total_col="__ny",
-    ).localCheckpoint(eager=False)
+    # Both orderings rank the same doc relation: one stacked pass.
+    two_ranked = with_global_ranks(
+        base,
+        [("x", False, "__rx", "__nx"), ("y", False, "__ry", "__ny")],
+        ["doc_id"],
+        partition_by=["lang"],
+    )
     ranked = two_ranked.select(
         "lang", (F.col("__rx") - F.col("__ry")).cast("bigint").alias("d")
     )

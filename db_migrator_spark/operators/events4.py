@@ -755,13 +755,14 @@ def q_rfm_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-rank pattern (``distributed_rank``: approxQuantile bins +
     bin-partitioned row_number + exact per-bin offsets + closed-form
     NTILE arithmetic, the shape proven in q_ntile_buckets) — both rank
-    orderings share ONE quantile action, every stage is parallel, and
+    orderings share ONE stacked pass (``with_global_ranks``: one
+    quantile action, one keyed rank), every stage is parallel, and
     no single-partition window exists anywhere in the plan. The
     quantile pass recomputes the orders aggregate once; at scale that
     second parallel pass beats persisting a customer-sized
     intermediate.
     """
-    from .distributed_rank import ntile_expr, quantile_cuts, with_global_rank
+    from .distributed_rank import ntile_expr, with_global_ranks
 
     orders = load_table(spark, sf_dir, "orders")
     pre = F.col("o_orderdate") < F.lit(GROWTH_PIVOT).cast("timestamp")
@@ -782,18 +783,16 @@ def q_rfm_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         # faster than the materialization pays back (unlike the five
         # sites where it won; BENCH_NOTES round-11).
     )
-    cuts = quantile_cuts(per_cust, ["r1", "r2"])
-    # Nested ranks: a lazy checkpoint after each level keeps the next
-    # level's two plan consumers (window + offsets) from re-running the
-    # one below (SCALE.md multi-consumer rule, as in q_customer_rfm).
-    ranked = with_global_rank(
-        per_cust, "r1", ["o_custkey"], cuts=cuts["r1"],
-        rank_col="__rn_pre", total_col="__n_pre",
-    ).localCheckpoint(eager=False)
-    ranked = with_global_rank(
-        ranked, "r2", ["o_custkey"], cuts=cuts["r2"],
-        rank_col="__rn_post", total_col="__n_post",
-    ).localCheckpoint(eager=False)
+    # Both orderings rank the same customer relation: one stacked pass.
+    ranked = with_global_ranks(
+        per_cust,
+        [
+            ("r1", False, "__rn_pre", "__n_pre"),
+            ("r2", False, "__rn_post", "__n_post"),
+        ],
+        ["o_custkey"],
+        partition_by=[],
+    )
     scored = ranked.select(
         "o_custkey",
         ntile_expr("__rn_pre", "__n_pre", 5).alias("q_pre"),

@@ -609,10 +609,11 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation, each (nation, bin) ranks independently, exact per-bin
     offsets and closed-form NTILE arithmetic reproduce
     ``NTILE(5) OVER (PARTITION BY nation ORDER BY ...)`` bit-exactly.
-    One quantile action covers all three dimensions. Recency in whole
-    days, monetary in exact micros; ntile ties break on custkey.
+    One stacked pass (``with_global_ranks``) ranks all three
+    dimensions. Recency in whole days, monetary in exact micros; ntile
+    ties break on custkey.
     """
-    from .distributed_rank import ntile_expr, quantile_cuts, with_global_rank
+    from .distributed_rank import ntile_expr, with_global_ranks
 
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer").select(
@@ -638,32 +639,24 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "frequency",
         "monetary_micros",
         # customer-grain aggregate feeds the quantile action plus the
-        # first rank level (window and offset sides) plus the final
-        # plan — checkpoint so the orders groupBy+join runs once (r11;
-        # entity-grain only, never raw-scan-grain).
+        # rank's bin counts plus the final plan — checkpoint so the
+        # orders groupBy+join runs once (r11; entity-grain only, never
+        # raw-scan-grain).
     ).localCheckpoint(eager=False)
 
-    cuts = quantile_cuts(
-        based, ["recency_days", "frequency", "monetary_micros"]
+    # The three orderings rank the same customer relation, so they take
+    # one stacked pass (one quantile action, one keyed rank), not three
+    # nested levels.
+    ranked = with_global_ranks(
+        based,
+        [
+            ("recency_days", False, "__rn_r", "__n_r"),
+            ("frequency", True, "__rn_f", "__n_f"),
+            ("monetary_micros", True, "__rn_m", "__n_m"),
+        ],
+        ["o_custkey"],
+        partition_by=["c_nationkey"],
     )
-    # Nested ranks (SCALE.md multi-consumer rule): each rank level's
-    # output is entity-grain and feeds the next level TWICE (window side
-    # + offset side), so a lazy checkpoint after every level caps the
-    # lineage at one materialization per level. Round 13 replaced three
-    # driver-side offset folds (each a collect re-running the levels
-    # below it) with this shape: interleaved A/B at sf0.1, 5.12 -> 3.07s
-    # min-of-mins, new <= old 3/3 pairs (BENCH_NOTES round-13c).
-    ranked = based
-    for col, desc, tag in (
-        ("recency_days", False, "r"),
-        ("frequency", True, "f"),
-        ("monetary_micros", True, "m"),
-    ):
-        ranked = with_global_rank(
-            ranked, col, ["o_custkey"], cuts=cuts[col], descending=desc,
-            rank_col=f"__rn_{tag}", total_col=f"__n_{tag}",
-            partition_by=["c_nationkey"],
-        ).localCheckpoint(eager=False)
     scored = ranked.select(
         "c_nationkey",
         "o_custkey",

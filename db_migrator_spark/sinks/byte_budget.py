@@ -36,7 +36,6 @@ from collections.abc import Callable, Iterable, Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import TimestampType
 
 from ..common.rendering import NULL, render_literal
 from ..common.schema import TargetColumn
@@ -65,6 +64,11 @@ def render_column(col: pa.Array) -> pa.Array:
     import pyarrow.compute as pc
 
     t = col.type
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        # Arrow tags a Spark ``timestamp`` with spark.sql.session.timeZone:
+        # render the wall time in that zone, then as a timestamp_ntz.
+        col = pc.local_timestamp(col)
+        t = col.type
     if pa.types.is_integer(t):
         out = pc.cast(col, pa.string())
     elif pa.types.is_string(t) or pa.types.is_large_string(t):
@@ -73,17 +77,10 @@ def render_column(col: pa.Array) -> pa.Array:
         out = _quote(pc.replace_substring(col.cast(pa.string()), "'", "''"))
     elif pa.types.is_date32(t):
         out = _quote(pc.cast(col, pa.string()))
-    elif pa.types.is_timestamp(t) and t.tz is None:  # timestamp_ntz
+    elif pa.types.is_timestamp(t):  # timestamp_ntz, or zoned made local above
         out = _quote(pc.replace_substring_regex(pc.cast(col, pa.string()), _TRIM_FRACTION, r"\1"))
     elif pa.types.is_boolean(t):
         out = pc.if_else(col, "1", "0")
-    elif pa.types.is_timestamp(t):
-        # Arrow hands over an aware UTC instant; the row path renders
-        # TimestampType.fromInternal's naive local wall time, so convert
-        # the epoch microseconds the same way.
-        local = TimestampType().fromInternal
-        values = pc.cast(col, pa.int64()).to_pylist()
-        return pa.array([render_literal(local(v)) for v in values], pa.string())
     elif (
         # float/double: Python's shortest-repr ``repr`` is the spec, and no
         # Arrow or JVM (17: Double.toString is not shortest) form equals it.

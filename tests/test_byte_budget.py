@@ -8,6 +8,7 @@ import os
 import time
 from decimal import Decimal
 from pathlib import Path
+from zoneinfo import ZoneInfo
 
 import pyarrow as pa
 import pytest
@@ -196,11 +197,13 @@ RENDER_CASES = {
 
 
 def _row_path_values(col):
-    """The values the row path's ``Row`` objects hold: a timestamp with a
-    time zone arrives there as the naive local wall time."""
+    """The values ``render_literal`` is the spec for: a timestamp with a
+    time zone renders as its naive wall time in the column's zone (Spark
+    tags it with ``spark.sql.session.timeZone``)."""
     values = col.to_pylist()
     if pa.types.is_timestamp(col.type) and col.type.tz is not None:
-        return [v and v.astimezone().replace(tzinfo=None) for v in values]
+        zone = ZoneInfo(col.type.tz)
+        return [v and v.astimezone(zone).replace(tzinfo=None) for v in values]
     return values
 
 
@@ -216,16 +219,17 @@ def test_render_column_matches_render_literal(kind, data):
     assert rendered.to_pylist() == [render_literal(v) for v in _row_path_values(col)]
 
 
-def test_render_timestamp_with_time_zone_uses_local_wall_time(monkeypatch):
-    """Away from UTC the row path's naive local value differs from the UTC
-    instant Arrow hands over; the renderer follows the row path."""
-    col = pa.array(
-        [dt.datetime(2023, 1, 1, 0, 30, tzinfo=dt.timezone.utc), None], pa.timestamp("us", tz="UTC")
-    )
+def test_render_timestamp_with_time_zone_uses_column_zone_wall_time(monkeypatch):
+    """The wall time is the one in the column's zone (the session time
+    zone), never the Python worker's OS time zone: with ``TZ`` at
+    UTC+05:30, a UTC-tagged instant still renders its UTC wall time."""
+    instant = dt.datetime(2023, 1, 1, 0, 30, tzinfo=dt.timezone.utc)
     monkeypatch.setenv("TZ", "XST-05:30")
     time.tzset()
     try:
-        assert render_column(col).to_pylist() == ["'2023-01-01 06:00:00'", "NULL"]
+        for zone, want in (("UTC", "'2023-01-01 00:30:00'"), ("Asia/Kolkata", "'2023-01-01 06:00:00'")):
+            col = pa.array([instant, None], pa.timestamp("us", tz=zone))
+            assert render_column(col).to_pylist() == [want, "NULL"]
     finally:
         monkeypatch.undo()
         time.tzset()
@@ -334,6 +338,19 @@ def test_packets_equal_driver_render_row_on_every_cast_type(spark, tmp_path, lar
         spark.conf.unset("spark.sql.execution.arrow.useLargeVarTypes")
     assert len(packets) > 4
     assert packets == _driver_packets(df, "zoo", 300)
+
+
+def test_distributed_write_renders_timestamps_in_the_session_time_zone(spark, tmp_path):
+    """Executors render a zoned ``timestamp`` in ``spark.sql.session.timeZone``,
+    whatever their OS time zone."""
+    df = spark.createDataFrame([(dt.datetime(2023, 1, 1, 0, 30, tzinfo=dt.timezone.utc),)], "ts timestamp")
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        packets = _write_packets(df, "t", 1_000, tmp_path)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert packets == ["INSERT INTO `t` (`ts`) VALUES ('2023-01-01 06:00:00')"]
 
 
 def test_write_is_one_spark_job(spark, tmp_path):

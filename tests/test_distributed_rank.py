@@ -6,12 +6,14 @@ the global and the keyed (partition_by) form — on data with heavy ties
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql.window import Window as W
 
 from db_migrator_spark.operators.distributed_rank import (
     ntile_expr,
     quantile_cuts,
     with_global_rank,
+    with_global_ranks,
 )
 
 
@@ -238,3 +240,143 @@ def test_keyed_rank_keeps_null_key_groups(spark):
         .count()
     )
     assert bad == 0, "keyed NULL-group mismatch"
+
+
+_LONG_MIN, _LONG_MAX = -(2**63), 2**63 - 1
+
+
+def test_property_stacked_ranks_match_windows(spark):
+    """Hypothesis sweep of ``with_global_ranks``: one to four orderings
+    of one relation (the same column may appear in both directions)
+    must each equal ROW_NUMBER() over its own keyed window under Spark's
+    defaults — on NULL-heavy, tie-heavy integral data with Long.MIN and
+    Long.MAX, one-row groups and a NULL partition key."""
+    from hypothesis import HealthCheck, example, given, settings
+    from hypothesis import strategies as st
+
+    value = st.one_of(
+        st.none(),
+        st.integers(min_value=-3, max_value=3),
+        st.sampled_from([_LONG_MIN, _LONG_MAX]),
+    )
+    small = st.one_of(st.none(), st.integers(min_value=-2**31, max_value=2**31 - 1))
+
+    @settings(
+        max_examples=8,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @example(  # every edge at once, whatever the random draws hit
+        rows=[
+            (10, None, None, 0),
+            (None, 3, 1, 0),
+            (5, _LONG_MIN, -1, 0),
+            (None, _LONG_MAX, 0, 1),
+            (7, None, None, None),
+            (10, 3, 1, 1),
+            (_LONG_MIN, _LONG_MAX, 2**31 - 1, None),
+            (_LONG_MAX, _LONG_MIN, -2**31, 2),
+        ],
+        orderings=[("a", False), ("b", True), ("a", True), ("c", True)],
+        keyed=True,
+    )
+    @given(
+        rows=st.lists(
+            st.tuples(value, value, small, st.one_of(st.none(), st.integers(0, 3))),
+            min_size=1,
+            max_size=60,
+        ),
+        orderings=st.lists(
+            st.tuples(st.sampled_from(["a", "b", "c"]), st.booleans()),
+            min_size=1,
+            max_size=3,
+            unique=True,
+        ),
+        keyed=st.booleans(),
+    )
+    def run(rows, orderings, keyed):
+        df = spark.createDataFrame(
+            [(i, *r) for i, r in enumerate(rows)],
+            "k long, a long, b long, c int, g long",
+        )
+        keys = ["g"] if keyed else []
+        spec = W.partitionBy(*keys)
+        named = [
+            (col, desc, f"rn{i}", f"n{i}")
+            for i, (col, desc) in enumerate(orderings)
+        ]
+        got = with_global_ranks(df, named, ["k"], partition_by=keys)
+        assert got.columns == [*df.columns, *[c for _, _, r, n in named for c in (r, n)]]
+        want = df.select(
+            "*",
+            *[
+                F.row_number()
+                .over(spec.orderBy(F.desc(c) if d else F.asc(c), "k"))
+                .alias(r)
+                for c, d, r, _ in named
+            ],
+            *[F.count(F.lit(1)).over(spec).alias(n) for _, _, _, n in named],
+        )
+        got_rows = sorted(got.collect(), key=lambda r: r.k)
+        want_rows = sorted(want.collect(), key=lambda r: r.k)
+        assert [r.asDict() for r in got_rows] == [
+            r.asDict() for r in want_rows
+        ]
+
+    run()
+
+
+def test_stacked_ranks_reject_non_integral_orderings(spark):
+    df = spark.createDataFrame([(1, 1.5)], "k long, x double")
+    with pytest.raises(TypeError, match="x is double"):
+        with_global_ranks(df, [("x", False, "r", "n")], ["k"], partition_by=[])
+
+
+def _py4j_commands(fn):
+    """py4j commands the driver sends while ``fn`` runs, less the object
+    deletes that Python's garbage collector sends whenever it runs."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += not command.startswith("m\nd\n")
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return sent[0]
+
+
+def test_rank_bin_costs_constant_py4j_commands(spark):
+    """The n_bins-term bin is one SQL expression: building the rank with
+    31 cuts sends about as many py4j commands as with 1 cut (a per-cut
+    Column chain sends several per cut)."""
+    df = _fixture(spark)
+
+    def build(cuts):
+        return lambda: with_global_rank(df, "v", ["k"], cuts=cuts)
+
+    build([0.5])()  # warm: first-call lookups are not the bin's cost
+    one = _py4j_commands(build([0.5]))
+    many = _py4j_commands(build([float(c) for c in range(31)]))
+    assert many - one <= 5, (one, many)
+
+
+def test_customer_rfm_build_jobs(spark):
+    """``q_customer_rfm`` ranks its three orderings in one stacked pass:
+    building it starts 10 Spark jobs on sf0.01 (the checkpointed
+    customer aggregate, the quantile action, the bin-count checkpoint),
+    where three nested rank levels started 33."""
+    from test_byte_budget_oracle import SF
+
+    from db_migrator_spark.operators.quality import q_customer_rfm
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    q_customer_rfm(spark, SF)
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 10

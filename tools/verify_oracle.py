@@ -11,10 +11,14 @@ name, rows sorted). Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# This file's own checkout: perfbench imports this module from the checkout
+# it measures, which need not be the only copy of the package on the machine.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def normalize(val) -> str:
@@ -63,8 +67,6 @@ def main() -> int:
     con.execute("SET max_temp_directory_size = '30GB'")
     from db_migrator_spark.io import TABLES
 
-    import os
-
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(path):  # Spark-written datasets are directories
@@ -83,7 +85,7 @@ def main() -> int:
     import json
 
     ever_oracled: set[str] = set()
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
         try:
             data = json.load(open(path))
         except Exception:
