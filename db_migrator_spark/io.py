@@ -87,8 +87,9 @@ def ngram_explode(
     higher-order ``transform`` lambda, which Spark evaluates INTERPRETED
     per element (and which re-evaluates non-trivial child expressions
     like ``split(text)`` per element when referenced inside the lambda).
-    Identical value multiset to the lambda form (probe_shingle_r15:
-    count + checksum parity, -30% wall at sf0.1 on the 3-gram build)."""
+    Identical value multiset to the lambda form (count + checksum
+    parity, -30% wall at sf0.1 on the 3-gram build; OPTIMIZATION_r15.md,
+    "io.ngram_explode")."""
     size = F.size(F.col(ws_col))
     zipped = F.arrays_zip(
         *[

@@ -8,8 +8,15 @@ Spark-first:
 - n-gram Jaccard: exact pairwise similarity restricted to pairs sharing at
   least one shingle (inverted-index self-join) — never a cartesian product;
 - MinHash-LSH: signature + banding so candidate generation is a bucket
-  groupBy; only bucket-mates are compared;
-- SimHash: 64-bit fingerprint + banded Hamming candidate join.
+  groupBy; only bucket-mates are compared, then exact-verified. Two
+  implementations: ``dedup_minhash_lsh`` (xxhash64, rows-only) and
+  ``dedup_minhash_portable`` (md5, oracle-backed); the md5 signatures
+  cost ~1.5x the xxhash64 wall at sf1, so the fast one stays;
+- SimHash (``dedup_simhash``, in ``dedup2``): 64-bit fingerprint +
+  banded Hamming candidates, exact-verified, oracle-backed.
+
+Each LSH family is a cheap candidate filter sized for recall, then an
+exact check.
 
 Scale notes (100 TB): every operator here is shuffle-bounded by
 |shingles| or |buckets|, not |docs|². The shingle inverted index is the
@@ -22,7 +29,7 @@ handles comfortably.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io import load_table, ngram_explode
 
@@ -69,9 +76,10 @@ MAX_BAND_BUCKET = int((2 * BUCKET_PAIR_BUDGET) ** 0.5)  # = 64
 MAX_PAIRS_PER_DOC = 64
 
 
-def _cap_buckets(buckets: DataFrame, keys: list[str], max_size: int = MAX_BAND_BUCKET) -> DataFrame:
-    """Drop candidate buckets larger than ``max_size`` — shared guard for
-    every group-then-pair operator (minhash/simhash bands, LSH tables)."""
+def _cap_buckets(buckets: DataFrame, keys: list[str], max_size: int) -> DataFrame:
+    """Drop candidate buckets larger than ``max_size`` — the shared guard
+    of the skip-the-hot-bucket operators (minhash bands, session-overlap
+    hours, image-hash bands, embedding LSH tables)."""
     hot = (
         buckets.groupBy(*keys).count().filter(F.col("count") > max_size).select(*keys)
     )
@@ -132,9 +140,7 @@ def _bucket_pairs(
     )
 
 
-def _shingle_index_fresh(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def _shingle_index_fresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted shingle index built IN-PLAN, per invocation.
 
     Rounds 7-13 persisted this index to a /tmp cache keyed on the
@@ -144,12 +150,11 @@ def _shingle_index_fresh(
     invocation must compute from the parquet inputs — so the index is
     now rebuilt inside each invocation (round 14; the honest rebuild
     cost is ~0.5-0.9s per query at sf0.1, see OPTIMIZATION_r14.md).
-    ``checkpoint=True`` materializes it once for multi-consumer plans
-    (sizes + both join sides); single-consumer callers skip the
-    checkpoint barrier (measured a LOSS for one consumer, round 7).
+    Every caller reads the index more than once (signatures or sizes,
+    plus the verify joins), so it is materialized once with
+    ``localCheckpoint``.
     """
-    sh = _shingle_index(load_table(spark, sf_dir, "documents"))
-    return sh.localCheckpoint() if checkpoint else sh
+    return _shingle_index(load_table(spark, sf_dir, "documents")).localCheckpoint()
 
 
 def _shingle_index(docs: DataFrame) -> DataFrame:
@@ -275,9 +280,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_signatures(
-    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
-) -> DataFrame:
+def _minhash_signatures(sh: DataFrame) -> DataFrame:
     """(doc_id, h0..h{K-1}) — K independent min-hashes per doc.
 
     K permutations are simulated with K seeded xxhash64s of the shingle;
@@ -290,8 +293,6 @@ def _minhash_signatures(
     index here as well is a LOSS (2.9s) — it has one consumer, so the
     materialization buys nothing.
     """
-    if sh is None:
-        sh = _shingle_index_fresh(spark, sf_dir)
     mins = [
         F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
         for i in range(MINHASH_K)
@@ -301,7 +302,7 @@ def _minhash_signatures(
 
 def _verify_pairs_exact_jaccard(sh: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact shingle-Jaccard for a ``(d1, d2)`` candidate frame — the
-    verify half of every LSH dedup (candidates -> exact score -> keep).
+    verify half of ``dedup_minhash_lsh`` (candidates -> exact score -> keep).
 
     Cost is candidate-proportional, never all-pairs: the candidate set is
     already budget-bounded by ``_cap_buckets``, the shared-shingle count is
@@ -381,7 +382,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # helper's candidate semi-join) — one in-plan build + localCheckpoint
     # per invocation (round 14: cross-run cache removed).
     sh = _shingle_index_fresh(spark, sf_dir)
-    sig = _minhash_signatures(spark, sf_dir, sh)
+    sig = _minhash_signatures(sh)
     bands = F.array(
         *[
             F.struct(
@@ -394,7 +395,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = sig.select("doc_id", F.explode(bands).alias("b")).select(
         "doc_id", F.col("b.band").alias("band"), F.col("b.bhash").alias("bhash")
     )
-    buckets = _cap_buckets(buckets, ["band", "bhash"])
+    buckets = _cap_buckets(buckets, ["band", "bhash"], MAX_BAND_BUCKET)
     # Stays a self-join (NOT _bucket_pairs): this cap is the anti-join
     # guard, so the banded keys are not already shuffled on the bucket
     # key — the explode's groupBy would ADD an exchange (A/B r10: +12%),
@@ -422,118 +423,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         _verify_pairs_exact_jaccard(sh, est)
-        .filter(F.col("jaccard") >= 0.2)
-        .orderBy("d1", "d2")
-    )
-
-
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash fingerprints + banded Hamming candidates,
-    exact-verified.
-
-    Fingerprint: per word-token hash, each of the 64 bits votes +1/-1; the
-    sign of the vote sum is the fingerprint bit. Computed as 64 conditional
-    sums in a single groupBy pass (map-side combine keeps the shuffle at 64
-    longs per doc per partition). Candidates share at least one of 4
-    16-bit bands (Hamming <= 3 guarantees a shared band by pigeonhole).
-    Hamming <= 6 survivors are then EXACT-VERIFIED: each emitted pair
-    carries the exact shingle Jaccard and must clear the 0.2 near-dup
-    threshold. The pair list stays hash-dependent (rows-only check), but
-    every row is self-validating — its ``jaccard`` is recomputable exact
-    arithmetic, bound-checkable without reproducing xxhash64.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
-    ).withColumn("wh", F.xxhash64("w"))
-    # Round 15 — packed votes, the dedup2 portable twin's rewrite on the
-    # xxhash64 path: positive-bit counts t_j packed TWO per 64-bit lane
-    # (32 sums instead of 64 conditional +-1 sums) plus the token count
-    # N; the signed vote is s_j = 2*t_j - N, so "s_j > 0" == "2*t_j > N"
-    # and the fingerprint bits are identical (verified 0 mismatches over
-    # the full sf1 corpus; A/B warm 2.0 -> 1.7s, first pass 4.4 -> 1.8s).
-    # Lane safety: each lane accumulates at most N < 2^31 tokens per doc
-    # — enforced LOUDLY below rather than silently corrupting lanes.
-
-    def _bit(j: int):
-        return F.shiftrightunsigned(F.col("wh"), j).bitwiseAND(F.lit(1))
-
-    voted = words.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("__N"),
-        *[
-            F.sum(F.shiftleft(_bit(2 * p), 32) + _bit(2 * p + 1)).alias(f"t{p}")
-            for p in range(32)
-        ],
-    )
-    n_guarded = F.expr(
-        "CASE WHEN __N < 2147483648 THEN __N ELSE"
-        " CAST(raise_error('dedup_simhash: packed vote lanes require"
-        " < 2^31 tokens per document') AS BIGINT) END"
-    )
-
-    def _t(j: int):
-        lane = F.col(f"t{j // 2}")
-        return (
-            F.shiftright(lane, 32)
-            if j % 2 == 0
-            else lane.bitwiseAND(F.lit(0xFFFFFFFF))
-        )
-
-    # Assemble the fingerprint with bitwise OR (addition would overflow the
-    # sign bit under ANSI arithmetic when bit 63 is set).
-    from functools import reduce
-
-    bit_terms = [
-        F.when(2 * _t(j) > F.col("__Ng"), F.shiftleft(F.lit(1).cast("long"), j))
-        .otherwise(F.lit(0).cast("long"))
-        for j in range(64)
-    ]
-    fingerprint = reduce(lambda a, b: a.bitwiseOR(b), bit_terms)
-    voted = voted.withColumn("__Ng", n_guarded)
-    # fp (|docs| x 2 longs) feeds banding + both Hamming sides: checkpoint
-    # computes the 64-sum groupBy once (4.25s -> 3.44s at sf0.1)
-    fp = voted.select("doc_id", fingerprint.alias("simhash")).localCheckpoint()
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), band * 16)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("bits"),
-            )
-            for band in range(4)
-        ]
-    )
-    buckets = fp.select("doc_id", F.explode(band_arr).alias("b")).select(
-        "doc_id", "b.band", "b.bits"
-    )
-    buckets = _cap_buckets(buckets, ["band", "bits"])
-    # Self-join, not _bucket_pairs — same anti-join-cap rationale as
-    # dedup_minhash_lsh above (A/B r10: explode measured +4%).
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bits") == F.col("r.bits"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("d1"), F.col("r.doc_id").alias("d2"))
-        .distinct()
-    )
-    f1 = fp.select(F.col("doc_id").alias("d1"), F.col("simhash").alias("s1"))
-    f2 = fp.select(F.col("doc_id").alias("d2"), F.col("simhash").alias("s2"))
-    near = (
-        cand.join(f1, "d1").join(f2, "d2")
-        .select("d1", "d2", F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))).alias("hamming"))
-        .filter(F.col("hamming") <= 6)
-    )
-    # The verify helper semi-joins the index down to candidate docs in a
-    # single scan — one consumer, so the in-plan build skips the
-    # checkpoint barrier.
-    sh = _shingle_index_fresh(spark, sf_dir, checkpoint=False)
-    return (
-        _verify_pairs_exact_jaccard(sh, near)
         .filter(F.col("jaccard") >= 0.2)
         .orderBy("d1", "d2")
     )
@@ -771,7 +660,6 @@ QUERIES = {
     "dedup_ngram_jaccard": dedup_ngram_jaccard,
     "dedup_containment": dedup_containment,
     "dedup_minhash_lsh": dedup_minhash_lsh,
-    "dedup_simhash": dedup_simhash,
     "dedup_clusters": dedup_clusters,
     "dedup_embedding_cosine": dedup_embedding_cosine,
 }
@@ -990,11 +878,12 @@ ORACLES["dedup_conflict_audit"] = f"""
 # Portable MinHash-LSH: md5-based signatures so the WHOLE LSH path —
 # signatures, banding, bucket capping, candidate generation, exact
 # verify — is value-hash-provable against the DuckDB twin. The fast
-# sibling (dedup_minhash_lsh) keeps xxhash64 (JVM-side, ~3x cheaper)
-# and stays rows-only; this one is the end-to-end-verifiable variant.
-# Signatures are the min md5 HEX STRING per salt: fixed-width
-# lowercase hex compares lexicographically == numerically, so no hex
-# -> int conversion is needed anywhere.
+# sibling (dedup_minhash_lsh) keeps xxhash64 and stays rows-only: in
+# fresh-JVM A/B (tools/cold_ab.py, 4 cores) this variant is ~10% faster
+# at sf0.1 but ~1.5x slower at sf1, where its 8 md5 hex digests per
+# (doc, shingle) dominate. Signatures are the min md5 HEX STRING per
+# salt: fixed-width lowercase hex compares lexicographically ==
+# numerically, so no hex -> int conversion is needed anywhere.
 PORTABLE_MINHASH_K = 8  # signature length (md5 salts 0..K-1)
 PORTABLE_MINHASH_BANDS = 4  # 2 signatures per band
 PORTABLE_BUCKET_CAP = 64  # bucket members kept (by doc_id; deterministic)

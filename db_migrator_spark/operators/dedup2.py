@@ -1,17 +1,18 @@
-"""Portable SimHash with a full value-hash oracle (round 8c).
+"""SimHash near-dup pairs with a full value-hash oracle (round 8c).
 
-Completes the portable trilogy (``dedup.dedup_minhash_portable``,
-``similarity_lsh2.similarity_lsh_portable``): every LSH family in the
-engine now has a variant whose ENTIRE pipeline — fingerprints,
-banding, bucket capping, Hamming gate, exact verify — is value-hash-
-provable against the DuckDB twin. The xxhash64 sibling
-(``dedup.dedup_simhash``) stays the fast path.
+The ENTIRE pipeline — fingerprints, banding, bucket capping, Hamming
+gate, exact verify — is value-hash-provable against the DuckDB twin,
+like ``dedup.dedup_minhash_portable``. It is the only SimHash
+implementation, registered as both ``dedup_simhash`` and
+``dedup_simhash_portable``: the xxhash64 variant it replaced had no
+oracle, no better recall, and measured slower in fresh-JVM A/B
+(tools/cold_ab.py at sf0.1 and sf1; numbers in ROADMAP.md).
 
 Construction (bit-identical cross-engine):
 
-- Per (doc, word): the term count (frequency-weighted votes, like the
-  sibling) and the word's 64 hash bits, read as 16 md5 hex digits of
-  4 bits each (Spark ``conv(hex,16,10)`` == DuckDB
+- Per (doc, word): the term count (frequency-weighted votes) and the
+  word's 64 hash bits, read as 16 md5 hex digits of 4 bits each
+  (Spark ``conv(hex,16,10)`` == DuckDB
   ``strpos('0123456789abcdef', c) - 1`` — pinned by the span-plan
   lottery precedent).
 - Vote j = sum over words count * (2*bit_j - 1); fingerprint = the
@@ -259,7 +260,10 @@ def dedup_simhash_portable(
     )
 
 
-QUERIES = {"dedup_simhash_portable": dedup_simhash_portable}
+QUERIES = {
+    "dedup_simhash": dedup_simhash_portable,
+    "dedup_simhash_portable": dedup_simhash_portable,
+}
 
 
 def _simhash2_oracle() -> str:
@@ -347,6 +351,7 @@ def _simhash2_oracle() -> str:
 
 
 ORACLES = {"dedup_simhash_portable": _simhash2_oracle()}
+ORACLES["dedup_simhash"] = ORACLES["dedup_simhash_portable"]
 
 
 def dedup_minhash_estimator_audit(

@@ -64,7 +64,7 @@ def _copair_explode(li: DataFrame) -> DataFrame:
     i in the sorted list with ``v > u`` are exactly the lambda form's
     strictly-greater later elements. A/B at sf0.1: explode+distinct
     1.1 -> 0.8s (-27%); the same rewrite measured -3.3x on the
-    triangle wedge stage (probe_triangle2_r15)."""
+    triangle wedge stage (OPTIMIZATION_r15.md, graph_triangle_counts)."""
     ps = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_list("l_partkey")).alias("ps")
     )
@@ -126,9 +126,9 @@ def _oriented_triangle_credits(oriented: DataFrame) -> DataFrame:
         # directly. This replaces the r14 ``flatten(transform(...))``
         # form, whose higher-order-function lambdas are evaluated
         # INTERPRETED per wedge and whose 41M intermediate structs were
-        # the stage's real wall (probe_triangle2_r15: wedge+probe+
-        # credits 4.4 -> 1.3s at sf0.1, -3.3x, identical credit
-        # checksums; a packed-key LAMBDA variant measured WORSE than
+        # the stage's real wall (wedge+probe+credits 4.4 -> 1.3s at
+        # sf0.1, -3.3x, identical credit checksums, OPTIMIZATION_r15.md;
+        # a packed-key LAMBDA variant measured WORSE than
         # the struct baseline — the interpreter, not the struct, is
         # the cost).
         nbrs = oriented.groupBy("src").agg(

@@ -4,7 +4,11 @@ The fast sign-LSH (``similarity.similarity_lsh_pairs``) uses JVM
 hashing and float cosine scoring — deterministic but rows-only at the
 driver gate. This variant makes the ENTIRE random-hyperplane pipeline
 value-hash-provable, the embedding-space sibling of
-``dedup.dedup_minhash_portable``:
+``dedup.dedup_minhash_portable``. Unlike SimHash, whose oracle-backed
+variant beat the fast one and became the only implementation, both
+sign-LSH variants stay: at sf0.1 the fast one ran 3.40s against 8.16s
+here (4 interleaved in-process reps, 4 cores) and returned 403 pairs
+against 144.
 
 - Quantize: q = floor(x * 1e3) per component (IEEE-exact, the
   centroids contract; milli keeps every product inside BIGINT until

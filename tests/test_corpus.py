@@ -2,11 +2,12 @@
 metrics, decontamination, sequence packing, Q21 analog) — invariants the
 oracle hash can't express, checked on the real fixture."""
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 

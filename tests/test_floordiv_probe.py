@@ -18,7 +18,7 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.floordiv_probe import floored_sql  # noqa: E402
 from tools.verify_oracle import table_hash  # noqa: E402

@@ -1,5 +1,7 @@
 """IVF ANN recall vs brute force."""
 
+import os
+
 import pyspark.sql.functions as F
 
 SF = "/root/testdata/sf0.01"
@@ -86,7 +88,7 @@ def test_ivf_clustered_corpus_recall_pinned(spark, tmp_path):
     subprocess.run(
         [_sys.executable, "tools/make_ann_corpus.py", corpus, "4000", "60"],
         check=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     idx = str(tmp_path / "ivf")
     write_ivf_index(spark, corpus, idx)

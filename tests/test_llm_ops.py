@@ -14,6 +14,12 @@ def exact_pairs(spark):
     return {(r.d1, r.d2) for r in dedup_ngram_jaccard(spark, SF).collect()}
 
 
+def _near_dup_query(name):
+    import __spark_entry__ as em
+
+    return em.queries()[name]
+
+
 def test_minhash_lsh_recall(spark, exact_pairs):
     """MinHash-LSH candidates (est_jaccard >= 0.5) must recover the
     high-similarity exact pairs (jaccard >= 0.2 fixture pairs are ~0.9)."""
@@ -26,33 +32,35 @@ def test_minhash_lsh_recall(spark, exact_pairs):
 
 
 def test_simhash_covers_near_dups(spark, exact_pairs):
-    from db_migrator_spark.operators.dedup import dedup_simhash
-
-    got = {(r.d1, r.d2) for r in dedup_simhash(spark, SF).collect()}
+    got = {
+        (r.d1, r.d2)
+        for r in _near_dup_query("dedup_simhash")(spark, SF).collect()
+    }
     recall = len(got & exact_pairs) / len(exact_pairs)
     assert recall >= 0.8, f"simhash recall {recall} too low"
 
 
 def test_lsh_dedup_pairs_are_exact_verified(spark):
     """Every emitted minhash/simhash pair carries the exact shingle
-    Jaccard, equal to the exact twin's value for that pair, and above the
-    shared 0.2 threshold — the self-validating-output contract."""
-    from db_migrator_spark.operators.dedup import (
-        dedup_minhash_lsh,
-        dedup_ngram_jaccard,
-        dedup_simhash,
-    )
+    Jaccard (a double for the xxhash64 MinHash, ppm for the md5 SimHash),
+    equal to the exact twin's value for that pair, and above the shared
+    0.2 threshold — the self-validating-output contract."""
+    from db_migrator_spark.operators.dedup import dedup_ngram_jaccard
 
     exact = {
         (r.d1, r.d2): r.jaccard for r in dedup_ngram_jaccard(spark, SF).collect()
     }
-    for op in (dedup_minhash_lsh, dedup_simhash):
-        rows = op(spark, SF).collect()
+    checks = {
+        "dedup_minhash_lsh": (lambda r: r.jaccard, 1e-12),
+        "dedup_simhash": (lambda r: r.jaccard_ppm / 1e6, 1e-6),
+    }
+    for name, (jaccard, tol) in checks.items():
+        rows = _near_dup_query(name)(spark, SF).collect()
         assert rows
         for r in rows:
-            assert r.jaccard >= 0.2
-            assert (r.d1, r.d2) in exact, f"{op.__name__} emitted unverified pair"
-            assert abs(r.jaccard - exact[(r.d1, r.d2)]) < 1e-12
+            assert jaccard(r) >= 0.2
+            assert (r.d1, r.d2) in exact, f"{name} emitted unverified pair"
+            assert abs(jaccard(r) - exact[(r.d1, r.d2)]) < tol
 
 
 def test_similarity_lsh_recall(spark):

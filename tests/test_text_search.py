@@ -1,12 +1,13 @@
 """Semantics of the deferred round-2b ops (TF-IDF / BM25 / centroids /
 resample-ffill / Q8) plus the registration guarantees they rely on."""
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 

@@ -15,14 +15,17 @@ Prints per-sample minima and the min/median/max across samples.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import subprocess
 import sys
 
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _CHILD = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
-name, sf_dir = sys.argv[1], sys.argv[2]
+name, sf_dir, root = sys.argv[1], sys.argv[2], sys.argv[3]
+sys.path.insert(0, root)
 import __spark_entry__ as em
 from db_migrator_spark.session import get_spark
 spark = get_spark("cold-ab")
@@ -45,7 +48,7 @@ def main() -> int:
     mins: list[float] = []
     for i in range(samples):
         out = subprocess.run(
-            [sys.executable, "-c", _CHILD, name, sf_dir],
+            [sys.executable, "-c", _CHILD, name, sf_dir, _ROOT],
             capture_output=True, text=True, timeout=600,
         )
         line = out.stdout.strip().splitlines()[-1]

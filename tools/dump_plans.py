@@ -10,7 +10,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SHOWCASE = [
     ("q1_pricing_summary", "filter pushdown + 7/11 column pruning + partial agg"),

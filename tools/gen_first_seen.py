@@ -15,16 +15,19 @@ from __future__ import annotations
 
 import bisect
 import json
+import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_FIRST_SEEN = os.path.join(_ROOT, "db_migrator_spark", "first_seen.json")
+sys.path.insert(0, _ROOT)
 
 
 def main() -> int:
     commits = subprocess.run(
         ["git", "log", "--reverse", "--format=%H %s"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=_ROOT,
     ).stdout.splitlines()
     hashes = [c.split()[0] for c in commits]
     boundaries: list[tuple[int, int]] = []
@@ -38,8 +41,7 @@ def main() -> int:
 
     names = list(em.queries())
     try:
-        existing = json.load(
-            open("/root/repo/db_migrator_spark/first_seen.json"))
+        existing = json.load(open(_FIRST_SEEN))
     except Exception:
         existing = {}
 
@@ -52,13 +54,13 @@ def main() -> int:
         out = subprocess.run(
             ["git", "log", "--reverse", "--format=%H", "-S", f'"{name}"',
              "--", "db_migrator_spark", "__spark_entry__.py"],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=_ROOT,
         ).stdout.splitlines()
         idx = hashes.index(out[0]) if out else len(hashes)
         pos = bisect.bisect_right(bidx, idx)
         res[name] = (boundaries[pos - 1][1] + 1) if pos > 0 else 1
 
-    with open("/root/repo/db_migrator_spark/first_seen.json", "w") as f:
+    with open(_FIRST_SEEN, "w") as f:
         json.dump(dict(sorted(res.items())), f, indent=0)
         f.write("\n")
     from collections import Counter

@@ -12,10 +12,11 @@ wall seconds + rows/s per provider, interleaved, warm session.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from db_migrator_spark.session import get_spark
 

@@ -23,7 +23,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 # Arrow type names as rendered by str(pa.DataType).
 SAFE_DUCK = {"INT64", "INT32", "INT16", "INT8", "STRING", "LARGE_STRING",
@@ -45,7 +46,7 @@ SPARK_EQ = {
 
 def driver_history() -> dict[str, tuple[int, bool]]:
     last: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))):
         rnd = int("".join(c for c in os.path.basename(path) if c.isdigit()))
         try:
             data = json.load(open(path))
