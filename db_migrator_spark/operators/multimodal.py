@@ -6,10 +6,13 @@ SQL twin. On top of the decodes: resize, patchify, frame energy,
 perceptual hashes, and banded near-dup pair mining for both images and
 audio.
 
-Only the COMPRESSED-codec paths (JPEG etc.) are gated behind an
-import-try on PIL, which this container lacks; the two remaining
-arithmetic fakes (frame_sample, feature_extract) stand in for codec
-calls while exercising the real Arrow plumbing.
+``_read_p6`` and ``_read_pcm16`` are the only format code: every decode
+worker reads its payload through one of them, so all workers accept
+and reject the same inputs (a malformed payload raises ``ValueError``).
+``_per_payload`` turns a per-payload row function into the
+``mapInPandas`` worker. The two remaining arithmetic fakes
+(frame_sample, feature_extract) stand in for codec calls while
+exercising the real Arrow plumbing.
 
 The fixture corpus has no binary column, so payloads are synthesized
 deterministically from ``documents.text`` (UTF-8 bytes) — which also makes
@@ -23,31 +26,19 @@ matter how large the blobs are. Decode parallelism == partition count.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import hashlib
+import math
+import re
+import struct
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io import fan_out, load_table
-
-try:  # real decoders, absent in this container
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
-
-def decode_image_real(payload: bytes):  # pragma: no cover - env-dependent
-    """Real image decode — requires PIL, which this environment lacks."""
-    if not HAVE_PIL:
-        raise NotImplementedError("image decoding requires PIL (not in this container)")
-    import io
-
-    from PIL import Image
-
-    return Image.open(io.BytesIO(payload))
 
 
 def _with_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,8 +107,6 @@ _FEATURE_PRIMES = (31, 131, 523, 1031)
 
 
 def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
     for pdf in batches:
         n = pdf["payload"].str.len().astype("int64").to_numpy()
         d = pdf["doc_id"].astype("int64").to_numpy()
@@ -216,99 +205,149 @@ def _ppm_payloads(
     )
 
 
+# The two payload formats, each parsed in exactly one place. A P6 header
+# is the magic, width, height and maxval, whitespace-delimited, then one
+# whitespace byte before the raster.
+_P6_HEADER = re.compile(rb"\s*(\S+)\s+(\d+)\s+(\d+)\s+(\d+)\s")
+
+
+def _read_p6(buf: bytes, pos: int = 0) -> tuple[np.ndarray, int]:
+    """Read the P6 image that starts at ``buf[pos]``: an ``(h, w, 3)``
+    uint8 raster and the offset just past it. Raises ``ValueError`` on
+    another magic, a short header or raster, or samples wider than one
+    byte (maxval > 255)."""
+    m = _P6_HEADER.match(buf, pos)
+    if m is None:
+        raise ValueError("truncated or malformed PPM header")
+    magic, w, h, maxval = m.groups()
+    if magic != b"P6":
+        raise ValueError(f"not a P6 PPM: {magic!r}")
+    w, h, maxval = int(w), int(h), int(maxval)
+    if not (w and h and 0 < maxval <= 255):
+        raise ValueError(f"unsupported PPM: {w}x{h}, maxval {maxval}")
+    img = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=m.end())
+    return img.reshape(h, w, 3), m.end() + w * h * 3
+
+
+def _read_gray(buf: bytes) -> np.ndarray:
+    """The ``(h, w)`` int64 gray image of a P6 payload: the channel sum
+    r + g + b (0..765), the convention every gray feature here uses."""
+    return _read_p6(buf)[0].astype(np.int64).sum(axis=2)
+
+
+def _read_pcm16(buf: bytes) -> tuple[int, np.ndarray]:
+    """Read a RIFF/WAVE file of 16-bit mono PCM: walk its chunks (an
+    odd-size chunk is padded to even), check ``fmt `` and return the
+    sample rate and the ``data`` chunk as little-endian int16. Raises
+    ``ValueError`` on anything else."""
+    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE file")
+    pos, fmt, samples = 12, None, None
+    while pos + 8 <= len(buf):
+        cid = buf[pos : pos + 4]
+        (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
+        body = buf[pos + 8 : pos + 8 + size]
+        if len(body) < size:
+            raise ValueError(f"truncated {cid!r} chunk")
+        if cid == b"fmt ":
+            if size < 16:
+                raise ValueError("short fmt chunk")
+            fmt = struct.unpack("<HHIIHH", body[:16])
+        elif cid == b"data":
+            samples = np.frombuffer(body, dtype="<i2")
+        pos += 8 + size + (size & 1)
+    if fmt is None:
+        raise ValueError("missing fmt chunk")
+    if samples is None or not samples.size:
+        raise ValueError("missing or empty data chunk")
+    code, channels, rate, _, _, bits = fmt
+    if (code, channels, bits) != (1, 1, 16):
+        raise ValueError(
+            f"not 16-bit mono PCM: format {code}, {channels} channels, {bits} bits"
+        )
+    return rate, samples
+
+
+def _pack_bits(bits) -> int:
+    """Bit k of the result is ``bits[k]``."""
+    return sum(1 << k for k, b in enumerate(bits) if b)
+
+
+def _pandas_batch(schema: str, rows) -> pd.DataFrame:
+    """One output batch: the row tuples gathered column by column under
+    the names of a ``mapInPandas`` schema string."""
+    cols = [field.split()[0] for field in schema.split(",")]
+    recs: dict[str, list] = {k: [] for k in cols}
+    for row in rows:
+        for k, v in zip(cols, row, strict=True):
+            recs[k].append(v)
+    return pd.DataFrame(recs)
+
+
+def _per_payload(schema: str):
+    """Decorator: turn ``rows(doc_id, buf)``, which yields the output
+    tuples of one payload, into the ``mapInPandas`` worker over
+    ``(doc_id, payload)`` batches that emits ``schema``."""
+
+    def wrap(rows: Callable[[int, bytes], Iterator[tuple]]):
+        # The worker takes the row function's module-level name, so Spark
+        # pickles it by reference and tests import it by that name.
+        @functools.wraps(rows)
+        def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                yield _pandas_batch(
+                    schema,
+                    (
+                        row
+                        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
+                        for row in rows(int(doc_id), bytes(payload))
+                    ),
+                )
+
+        return worker
+
+    return wrap
+
+
 _DECODE_SCHEMA = (
     "doc_id bigint, width int, height int, mean_r double, mean_g double, mean_b double"
 )
 
 
-def _decode_ppm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: parse the P6 header, read the raster with
-    numpy, and emit per-channel pixel means. Integer channel sums divide
-    once in double — exact and order-free."""
-    import numpy as np
-
-    for pdf in batches:
-        recs = {"doc_id": [], "width": [], "height": [], "mean_r": [], "mean_g": [], "mean_b": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            # header: magic, width, height, maxval — whitespace-delimited
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                if start == pos:
-                    raise ValueError("truncated PPM header")
-                tokens.append(buf[start:pos])
-            pos += 1  # the single whitespace byte after maxval
-            if tokens[0] != b"P6":
-                raise ValueError(f"not a P6 PPM: {tokens[0]!r}")
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-            sums = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
-            recs["doc_id"].append(int(doc_id))
-            recs["width"].append(w)
-            recs["height"].append(h)
-            for k, key in enumerate(("mean_r", "mean_g", "mean_b")):
-                recs[key].append(float(sums[k]) / (w * h))
-        yield pd.DataFrame(recs)
+@_per_payload(_DECODE_SCHEMA)
+def _decode_ppm(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    """mapInPandas worker: per-channel pixel means of the P6 image.
+    Integer channel sums divide once in double — exact and order-free."""
+    img, _ = _read_p6(buf)
+    h, w, _ = img.shape
+    sums = img.reshape(-1, 3).astype(np.int64).sum(axis=0)
+    yield (doc_id, w, h, *(float(v) / (w * h) for v in sums))
 
 
 # Nearest-neighbor resize target: 16x16 -> 8x8 (stride 2, top-left
 # convention dst[r,c] = src[floor(r*sh), floor(c*sw)]).
 RESIZE_OUT = 8
 
-
-def _resize_ppm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: decode the P6 raster and nearest-neighbor
-    downsample by pure integer strides — the real pixel operation
-    ``multimodal_resize_plan`` only planned. Emits the resized raster's
-    md5 (byte-exact evidence) plus per-channel means of the RESIZED
-    image (integer sums, one double division)."""
-    import hashlib
-
-    import numpy as np
-
-    cols = ("doc_id", "out_w", "out_h", "digest", "mean_r", "mean_g", "mean_b")
-    for pdf in batches:
-        recs: dict[str, list] = {k: [] for k in cols}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                if start == pos:
-                    raise ValueError("truncated PPM header")
-                tokens.append(buf[start:pos])
-            pos += 1
-            if tokens[0] != b"P6":
-                raise ValueError(f"not a P6 PPM: {tokens[0]!r}")
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-            img = px.reshape(h, w, 3)
-            small = img[:: h // RESIZE_OUT, :: w // RESIZE_OUT, :]
-            raster = small.tobytes()
-            sums = small.reshape(-1, 3).astype(np.int64).sum(axis=0)
-            n = RESIZE_OUT * RESIZE_OUT
-            recs["doc_id"].append(int(doc_id))
-            recs["out_w"].append(RESIZE_OUT)
-            recs["out_h"].append(RESIZE_OUT)
-            recs["digest"].append(hashlib.md5(raster).hexdigest())
-            for k, key in enumerate(("mean_r", "mean_g", "mean_b")):
-                recs[key].append(float(sums[k]) / n)
-        yield pd.DataFrame(recs)
-
-
 _RESIZE_SCHEMA = (
     "doc_id bigint, out_w int, out_h int, digest string, "
     "mean_r double, mean_g double, mean_b double"
 )
+
+
+@_per_payload(_RESIZE_SCHEMA)
+def _resize_ppm(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    """mapInPandas worker: nearest-neighbor downsample of the P6 raster
+    by pure integer strides — the real pixel operation
+    ``multimodal_resize_plan`` only planned. Emits the resized raster's
+    md5 (byte-exact evidence) plus per-channel means of the RESIZED
+    image (integer sums, one double division)."""
+    img, _ = _read_p6(buf)
+    h, w, _ = img.shape
+    small = img[:: h // RESIZE_OUT, :: w // RESIZE_OUT, :]
+    sums = small.reshape(-1, 3).astype(np.int64).sum(axis=0)
+    digest = hashlib.md5(small.tobytes()).hexdigest()
+    n = RESIZE_OUT * RESIZE_OUT
+    yield (doc_id, RESIZE_OUT, RESIZE_OUT, digest, *(float(v) / n for v in sums))
 
 
 def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,8 +388,6 @@ _WAV_DATA_BYTES = WAV_SAMPLES * 2
 
 
 def _wav_header() -> bytes:
-    import struct
-
     return (
         b"RIFF"
         + struct.pack("<I", 36 + _WAV_DATA_BYTES)
@@ -381,46 +418,17 @@ _WAV_SCHEMA = (
 )
 
 
-def _decode_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: walk the RIFF chunks generically (fmt then
-    data), read int16 PCM with numpy, emit rate/duration/mean/RMS.
-    Integer sample sums divide once in double; sqrt is IEEE-exact."""
-    import math
-    import struct
-
-    import numpy as np
-
-    for pdf in batches:
-        recs = {k: [] for k in ("doc_id", "sample_rate", "n_samples", "duration_sec", "mean_amp", "rms")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE file")
-            pos, rate, samples = 12, None, None
-            while pos + 8 <= len(buf):
-                cid = buf[pos : pos + 4]
-                (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-                body = buf[pos + 8 : pos + 8 + size]
-                if cid == b"fmt ":
-                    fmt_code, _ch, rate = struct.unpack("<HHI", body[:8])
-                    if fmt_code != 1:
-                        raise ValueError(f"not PCM: fmt {fmt_code}")
-                elif cid == b"data":
-                    samples = np.frombuffer(body, dtype="<i2")
-                pos += 8 + size + (size & 1)
-            if rate is None or samples is None:
-                raise ValueError("missing fmt/data chunk")
-            s = samples.astype(np.int64)
-            n = len(s)
-            recs["doc_id"].append(int(doc_id))
-            recs["sample_rate"].append(int(rate))
-            recs["n_samples"].append(n)
-            recs["duration_sec"].append(float(n) / rate)
-            recs["mean_amp"].append(float(s.sum()) / n)
-            # math.sqrt, NOT ** 0.5: pow(x, 0.5) differs from the IEEE
-            # sqrt by 1 ulp on some inputs, which breaks oracle parity.
-            recs["rms"].append(math.sqrt(float((s * s).sum()) / n))
-        yield pd.DataFrame(recs)
+@_per_payload(_WAV_SCHEMA)
+def _decode_wav(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    """mapInPandas worker: rate/duration/mean/RMS of the WAV's int16
+    PCM. Integer sample sums divide once in double; sqrt is IEEE-exact."""
+    rate, samples = _read_pcm16(buf)
+    s = samples.astype(np.int64)
+    n = len(s)
+    # math.sqrt, NOT ** 0.5: pow(x, 0.5) differs from the IEEE
+    # sqrt by 1 ulp on some inputs, which breaks oracle parity.
+    rms = math.sqrt(float((s * s).sum()) / n)
+    yield doc_id, rate, n, float(n) / rate, float(s.sum()) / n, rms
 
 
 def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,40 +453,16 @@ _ENERGY_SCHEMA = (
 )
 
 
-def _frame_energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: chunk-walk the WAV, reshape samples into
-    FRAME_LEN windows, emit per-frame exact sum-of-squares and RMS."""
-    import math
-    import struct
-
-    import numpy as np
-
-    for pdf in batches:
-        recs = {k: [] for k in ("doc_id", "frame_id", "n_samples", "sum_sq", "rms")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            pos, samples = 12, None
-            while pos + 8 <= len(buf):
-                cid = buf[pos : pos + 4]
-                (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-                if cid == b"data":
-                    samples = np.frombuffer(
-                        buf[pos + 8 : pos + 8 + size], dtype="<i2"
-                    )
-                pos += 8 + size + (size & 1)
-            if samples is None:
-                raise ValueError("missing data chunk")
-            frames = samples.astype(np.int64)[: _N_FRAMES * FRAME_LEN].reshape(
-                _N_FRAMES, FRAME_LEN
-            )
-            sq = (frames * frames).sum(axis=1)
-            for fid in range(_N_FRAMES):
-                recs["doc_id"].append(int(doc_id))
-                recs["frame_id"].append(fid)
-                recs["n_samples"].append(FRAME_LEN)
-                recs["sum_sq"].append(int(sq[fid]))
-                recs["rms"].append(math.sqrt(float(sq[fid]) / FRAME_LEN))
-        yield pd.DataFrame(recs)
+@_per_payload(_ENERGY_SCHEMA)
+def _frame_energy(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    """mapInPandas worker: reshape the WAV's samples into FRAME_LEN
+    windows, emit per-frame exact sum-of-squares and RMS."""
+    _, samples = _read_pcm16(buf)
+    frames = samples.astype(np.int64)[: _N_FRAMES * FRAME_LEN].reshape(
+        _N_FRAMES, FRAME_LEN
+    )
+    for fid, sq in enumerate((frames * frames).sum(axis=1)):
+        yield doc_id, fid, FRAME_LEN, int(sq), math.sqrt(float(sq) / FRAME_LEN)
 
 
 def multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,41 +492,18 @@ _PATCH_SCHEMA = (
 )
 
 
-def _patchify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: parse P6, reshape (H, W, 3), block into
-    PATCH x PATCH tiles, emit per-tile channel means (exact integer
-    sums divided once in double)."""
-    import numpy as np
-
-    for pdf in batches:
-        recs = {k: [] for k in ("doc_id", "patch_r", "patch_c", "mean_r", "mean_g", "mean_b")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(buf[start:pos])
-            pos += 1
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-            img = px.reshape(h, w, 3).astype(np.int64)
-            for pr in range(_PATCH_GRID):
-                for pc in range(_PATCH_GRID):
-                    tile = img[
-                        pr * PATCH : (pr + 1) * PATCH,
-                        pc * PATCH : (pc + 1) * PATCH,
-                    ]
-                    sums = tile.reshape(-1, 3).sum(axis=0)
-                    recs["doc_id"].append(int(doc_id))
-                    recs["patch_r"].append(pr)
-                    recs["patch_c"].append(pc)
-                    for k, key in enumerate(("mean_r", "mean_g", "mean_b")):
-                        recs[key].append(float(sums[k]) / (PATCH * PATCH))
-        yield pd.DataFrame(recs)
+@_per_payload(_PATCH_SCHEMA)
+def _patchify(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    """mapInPandas worker: block the (H, W, 3) raster into PATCH x PATCH
+    tiles, emit per-tile channel means (exact integer sums divided once
+    in double)."""
+    img, _ = _read_p6(buf)
+    tiles = img.astype(np.int64).reshape(
+        _PATCH_GRID, PATCH, _PATCH_GRID, PATCH, 3
+    ).sum(axis=(1, 3))
+    for pr in range(_PATCH_GRID):
+        for pc in range(_PATCH_GRID):
+            yield (doc_id, pr, pc, *(float(v) / (PATCH * PATCH) for v in tiles[pr, pc]))
 
 
 def multimodal_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,36 +527,13 @@ def multimodal_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
 _AHASH_SCHEMA = "doc_id bigint, ahash bigint, n_ones int"
 
 
-def _ahash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    n_patches = _PATCH_GRID * _PATCH_GRID
-    for pdf in batches:
-        recs = {"doc_id": [], "ahash": [], "n_ones": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(buf[start:pos])
-            pos += 1
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-            gray = px.reshape(h, w, 3).astype(np.int64).sum(axis=2)
-            blocks = gray.reshape(
-                _PATCH_GRID, PATCH, _PATCH_GRID, PATCH
-            ).sum(axis=(1, 3))
-            total = int(blocks.sum())
-            bits = (blocks.reshape(-1) * n_patches) > total
-            ahash = int(sum(1 << k for k, b in enumerate(bits) if b))
-            recs["doc_id"].append(int(doc_id))
-            recs["ahash"].append(ahash)
-            recs["n_ones"].append(int(bits.sum()))
-        yield pd.DataFrame(recs)
+@_per_payload(_AHASH_SCHEMA)
+def _ahash(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    blocks = _read_gray(buf).reshape(
+        _PATCH_GRID, PATCH, _PATCH_GRID, PATCH
+    ).sum(axis=(1, 3))
+    bits = (blocks.reshape(-1) * (_PATCH_GRID * _PATCH_GRID)) > int(blocks.sum())
+    yield doc_id, _pack_bits(bits), int(bits.sum())
 
 
 def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -627,37 +565,13 @@ NEARDUP_MAX_BUCKET = 64
 _AH64_SCHEMA = "doc_id bigint, h_hi bigint, h_lo bigint"
 
 
-def _ahash64(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    n_blocks = _AH64_GRID * _AH64_GRID
-    for pdf in batches:
-        recs = {"doc_id": [], "h_hi": [], "h_lo": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(buf[start:pos])
-            pos += 1
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-            gray = px.reshape(h, w, 3).astype(np.int64).sum(axis=2)
-            blocks = gray.reshape(
-                _AH64_GRID, _AH64_BLOCK, _AH64_GRID, _AH64_BLOCK
-            ).sum(axis=(1, 3)).reshape(-1)
-            total = int(blocks.sum())
-            bits = (blocks * n_blocks) > total
-            lo = int(sum(1 << k for k in range(32) if bits[k]))
-            hi = int(sum(1 << (k - 32) for k in range(32, 64) if bits[k]))
-            recs["doc_id"].append(int(doc_id))
-            recs["h_hi"].append(hi)
-            recs["h_lo"].append(lo)
-        yield pd.DataFrame(recs)
+@_per_payload(_AH64_SCHEMA)
+def _ahash64(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    blocks = _read_gray(buf).reshape(
+        _AH64_GRID, _AH64_BLOCK, _AH64_GRID, _AH64_BLOCK
+    ).sum(axis=(1, 3)).reshape(-1)
+    bits = (blocks * (_AH64_GRID * _AH64_GRID)) > int(blocks.sum())
+    yield doc_id, _pack_bits(bits[32:]), _pack_bits(bits[:32])
 
 
 def multimodal_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,47 +667,22 @@ def _video_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decode_video(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_per_payload(_VID_SCHEMA)
+def _decode_video(doc_id: int, buf: bytes) -> Iterator[tuple]:
     """mapInPandas worker: demux the concatenated-P6 stream frame by
-    frame (header parse + raster read per frame), emit per-frame gray
-    mass, deltas, and integer-exact scene-cut flags."""
-    import numpy as np
-
-    for pdf in batches:
-        recs = {k: [] for k in ("doc_id", "frame_id", "gray_sum", "delta_gray", "is_cut")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            pos = 0
-            grays: list[int] = []
-            while pos < len(buf):
-                tokens = []
-                while len(tokens) < 4:
-                    while buf[pos : pos + 1].isspace():
-                        pos += 1
-                    start = pos
-                    while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                        pos += 1
-                    tokens.append(buf[start:pos])
-                pos += 1
-                if tokens[0] != b"P6":
-                    raise ValueError(f"bad frame magic {tokens[0]!r}")
-                w, h = int(tokens[1]), int(tokens[2])
-                px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-                pos += w * h * 3
-                grays.append(int(px.astype(np.int64).sum()))
-            for fid, g in enumerate(grays):
-                delta = None if fid == 0 else g - grays[fid - 1]
-                cut = (
-                    False
-                    if fid == 0
-                    else abs(delta) * 10 > grays[fid - 1]
-                )
-                recs["doc_id"].append(int(doc_id))
-                recs["frame_id"].append(fid)
-                recs["gray_sum"].append(g)
-                recs["delta_gray"].append(delta)
-                recs["is_cut"].append(cut)
-        yield pd.DataFrame(recs)
+    frame (each frame starts where ``_read_p6`` says the last one
+    ended), emit per-frame gray mass, deltas, and integer-exact
+    scene-cut flags."""
+    grays, pos = [], 0
+    while pos < len(buf):
+        img, pos = _read_p6(buf, pos)
+        grays.append(int(img.astype(np.int64).sum()))
+    for fid, g in enumerate(grays):
+        if fid == 0:
+            yield doc_id, fid, g, None, False
+        else:
+            prev = grays[fid - 1]
+            yield doc_id, fid, g, g - prev, abs(g - prev) * 10 > prev
 
 
 def multimodal_video_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -820,31 +709,12 @@ FP_MAX_BUCKET = 64
 _FP_SCHEMA = "doc_id bigint, fp bigint"
 
 
-def _audio_fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import struct
-
-    import numpy as np
-
-    for pdf in batches:
-        recs = {"doc_id": [], "fp": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            pos, samples = 12, None
-            while pos + 8 <= len(buf):
-                cid = buf[pos : pos + 4]
-                (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-                if cid == b"data":
-                    samples = np.frombuffer(
-                        buf[pos + 8 : pos + 8 + size], dtype="<i2"
-                    )
-                pos += 8 + size + (size & 1)
-            s = samples.astype(np.int64)[: _FP_NFRAMES * _FP_FRAME]
-            energy = (s * s).reshape(_FP_NFRAMES, _FP_FRAME).sum(axis=1)
-            bits = energy[1:] > energy[:-1]
-            fp = int(sum(1 << k for k, b in enumerate(bits) if b))
-            recs["doc_id"].append(int(doc_id))
-            recs["fp"].append(fp)
-        yield pd.DataFrame(recs)
+@_per_payload(_FP_SCHEMA)
+def _audio_fp(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    _, samples = _read_pcm16(buf)
+    s = samples.astype(np.int64)[: _FP_NFRAMES * _FP_FRAME]
+    energy = (s * s).reshape(_FP_NFRAMES, _FP_FRAME).sum(axis=1)
+    yield doc_id, _pack_bits(energy[1:] > energy[:-1])
 
 
 def multimodal_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -946,42 +816,16 @@ _CHSTATS_SCHEMA = (
 )
 
 
-def _channel_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        recs: dict[str, list] = {
-            k: []
-            for k in (
-                "doc_id", "ch", "n_px", "sum_val", "sum_sq", "min_val",
-                "max_val",
-            )
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(buf[start:pos])
-            pos += 1
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(
-                buf, dtype=np.uint8, count=w * h * 3, offset=pos
-            ).reshape(h * w, 3).astype(np.int64)
-            for ch in range(3):
-                col = px[:, ch]
-                recs["doc_id"].append(int(doc_id))
-                recs["ch"].append(ch)
-                recs["n_px"].append(int(col.size))
-                recs["sum_val"].append(int(col.sum()))
-                recs["sum_sq"].append(int((col * col).sum()))
-                recs["min_val"].append(int(col.min()))
-                recs["max_val"].append(int(col.max()))
-        yield pd.DataFrame(recs)
+@_per_payload(_CHSTATS_SCHEMA)
+def _channel_stats(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    img, _ = _read_p6(buf)
+    px = img.reshape(-1, 3).astype(np.int64)
+    for ch in range(3):
+        col = px[:, ch]
+        yield (
+            doc_id, ch, int(col.size), int(col.sum()), int((col * col).sum()),
+            int(col.min()), int(col.max()),
+        )
 
 
 def multimodal_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1010,8 +854,6 @@ _PHASH_SCALE = 1 << 20
 
 
 def _phash_basis() -> list[tuple[int, int, int]]:
-    import math
-
     rows = []
     for u in range(8):
         s = math.sqrt(0.125) if u == 0 else 0.5
@@ -1031,46 +873,20 @@ def _phash_basis() -> list[tuple[int, int, int]]:
 
 
 _PHASH_C = _phash_basis()
+_PHASH_M = np.array([c for _, _, c in _PHASH_C], dtype=np.int64).reshape(8, 8)
 _PHASH_SCHEMA = "doc_id bigint, ph_hi bigint, ph_lo bigint, n_ones int"
 
 
-def _phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    C = np.zeros((8, 8), dtype=np.int64)
-    for u, x, c in _PHASH_C:
-        C[u][x] = c
-    for pdf in batches:
-        recs = {"doc_id": [], "ph_hi": [], "ph_lo": [], "n_ones": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(buf[start:pos])
-            pos += 1
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-            gray = px.reshape(h, w, 3).astype(np.int64).sum(axis=2)
-            blocks = gray.reshape(
-                _AH64_GRID, _AH64_BLOCK, _AH64_GRID, _AH64_BLOCK
-            ).sum(axis=(1, 3))
-            d = C @ blocks @ C.T  # exact int64 (bounds in header note)
-            flat = d.reshape(-1)
-            ac = flat[1:]  # drop DC (k = 0)
-            med = int(np.partition(ac.copy(), 31)[31])  # 32nd smallest
-            bits = [False] + [int(v) > med for v in ac]
-            lo = int(sum(1 << k for k in range(32) if bits[k]))
-            hi = int(sum(1 << (k - 32) for k in range(32, 64) if bits[k]))
-            recs["doc_id"].append(int(doc_id))
-            recs["ph_hi"].append(hi)
-            recs["ph_lo"].append(lo)
-            recs["n_ones"].append(int(sum(bits)))
-        yield pd.DataFrame(recs)
+@_per_payload(_PHASH_SCHEMA)
+def _phash(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    blocks = _read_gray(buf).reshape(
+        _AH64_GRID, _AH64_BLOCK, _AH64_GRID, _AH64_BLOCK
+    ).sum(axis=(1, 3))
+    d = _PHASH_M @ blocks @ _PHASH_M.T  # exact int64 (bounds in header note)
+    ac = d.reshape(-1)[1:]  # drop DC (k = 0)
+    med = int(np.partition(ac, 31)[31])  # 32nd smallest
+    bits = np.concatenate(([False], ac > med))
+    yield doc_id, _pack_bits(bits[32:]), _pack_bits(bits[:32]), int(bits.sum())
 
 
 def multimodal_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1604,37 +1420,17 @@ ORACLES["multimodal_image_phash"] = f"""
 _ZCR_SCHEMA = "doc_id bigint, frame_id int, n_zc bigint"
 
 
-def _frame_zcr(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    """mapInPandas worker: chunk-walk the WAV, count strict sign flips
-    per FRAME_LEN window (vectorized int64 product test)."""
-    import struct
-
-    import numpy as np
-
-    for pdf in batches:
-        recs = {k: [] for k in ("doc_id", "frame_id", "n_zc")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            pos, samples = 12, None
-            while pos + 8 <= len(buf):
-                cid = buf[pos : pos + 4]
-                (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-                if cid == b"data":
-                    samples = np.frombuffer(
-                        buf[pos + 8 : pos + 8 + size], dtype="<i2"
-                    )
-                pos += 8 + size + (size & 1)
-            if samples is None:
-                raise ValueError("missing data chunk")
-            frames = samples.astype(np.int64)[: _N_FRAMES * FRAME_LEN].reshape(
-                _N_FRAMES, FRAME_LEN
-            )
-            zc = ((frames[:, :-1] * frames[:, 1:]) < 0).sum(axis=1)
-            for fid in range(_N_FRAMES):
-                recs["doc_id"].append(int(doc_id))
-                recs["frame_id"].append(fid)
-                recs["n_zc"].append(int(zc[fid]))
-        yield pd.DataFrame(recs)
+@_per_payload(_ZCR_SCHEMA)
+def _frame_zcr(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    """mapInPandas worker: count strict sign flips per FRAME_LEN window
+    of the WAV's samples (vectorized int64 product test)."""
+    _, samples = _read_pcm16(buf)
+    frames = samples.astype(np.int64)[: _N_FRAMES * FRAME_LEN].reshape(
+        _N_FRAMES, FRAME_LEN
+    )
+    zc = ((frames[:, :-1] * frames[:, 1:]) < 0).sum(axis=1)
+    for fid in range(_N_FRAMES):
+        yield doc_id, fid, int(zc[fid])
 
 
 def multimodal_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1700,46 +1496,27 @@ _SOBEL_SCHEMA = (
 )
 
 
-def _sobel_energy(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    """mapInPandas worker: parse P6, gray = channel sum, valid-mode
-    integer Sobel via shifted-slice accumulation, per-image totals."""
-    import numpy as np
-
-    for pdf in batches:
-        recs = {k: [] for k in ("doc_id", "edge_energy", "max_grad2", "n_strong")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(buf[start:pos])
-            pos += 1
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-            gray = px.reshape(h, w, 3).astype(np.int64).sum(axis=2)
-            gx = np.zeros((h - 2, w - 2), dtype=np.int64)
-            gy = np.zeros((h - 2, w - 2), dtype=np.int64)
-            for dr in (-1, 0, 1):
-                for dc in (-1, 0, 1):
-                    wx = dc * (2 - abs(dr))
-                    wy = dr * (2 - abs(dc))
-                    if wx == 0 and wy == 0:
-                        continue
-                    sl = gray[1 + dr : h - 1 + dr, 1 + dc : w - 1 + dc]
-                    if wx:
-                        gx += wx * sl
-                    if wy:
-                        gy += wy * sl
-            grad2 = gx * gx + gy * gy
-            recs["doc_id"].append(int(doc_id))
-            recs["edge_energy"].append(int(grad2.sum()))
-            recs["max_grad2"].append(int(grad2.max()))
-            recs["n_strong"].append(int((grad2 > STRONG_GRAD2).sum()))
-        yield pd.DataFrame(recs)
+@_per_payload(_SOBEL_SCHEMA)
+def _sobel_energy(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    """mapInPandas worker: valid-mode integer Sobel on the gray image via
+    shifted-slice accumulation, per-image totals."""
+    gray = _read_gray(buf)
+    h, w = gray.shape
+    gx = np.zeros((h - 2, w - 2), dtype=np.int64)
+    gy = np.zeros((h - 2, w - 2), dtype=np.int64)
+    for dr in (-1, 0, 1):
+        for dc in (-1, 0, 1):
+            wx = dc * (2 - abs(dr))
+            wy = dr * (2 - abs(dc))
+            if wx == 0 and wy == 0:
+                continue
+            sl = gray[1 + dr : h - 1 + dr, 1 + dc : w - 1 + dc]
+            if wx:
+                gx += wx * sl
+            if wy:
+                gy += wy * sl
+    grad2 = gx * gx + gy * gy
+    yield doc_id, int(grad2.sum()), int(grad2.max()), int((grad2 > STRONG_GRAD2).sum())
 
 
 def multimodal_image_sobel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1811,33 +1588,14 @@ _HIST_BIN_W = 768 // HIST_BINS  # 96 gray levels per bin
 _HISTO_SCHEMA = "doc_id bigint, bin int, n_px bigint"
 
 
-def _lum_histogram(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    """mapInPandas worker: parse P6, gray = channel sum, fixed-width
-    bincount per image."""
-    import numpy as np
-
-    for pdf in batches:
-        recs = {k: [] for k in ("doc_id", "bin", "n_px")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(buf[start:pos])
-            pos += 1
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-            gray = px.reshape(h * w, 3).astype(np.int64).sum(axis=1)
-            counts = np.bincount(gray // _HIST_BIN_W, minlength=HIST_BINS)
-            for b in range(HIST_BINS):
-                recs["doc_id"].append(int(doc_id))
-                recs["bin"].append(b)
-                recs["n_px"].append(int(counts[b]))
-        yield pd.DataFrame(recs)
+@_per_payload(_HISTO_SCHEMA)
+def _lum_histogram(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    """mapInPandas worker: fixed-width bincount of the gray image."""
+    counts = np.bincount(
+        _read_gray(buf).reshape(-1) // _HIST_BIN_W, minlength=HIST_BINS
+    )
+    for b in range(HIST_BINS):
+        yield doc_id, b, int(counts[b])
 
 
 def multimodal_image_histogram(
@@ -1894,53 +1652,20 @@ _MOMENTS_SCHEMA = (
 )
 
 
-def _image_moments(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    """mapInPandas worker: parse P6, gray = channel sum, vectorized
-    raw moments + milli centroids."""
-    import numpy as np
-
-    for pdf in batches:
-        recs = {
-            k: []
-            for k in (
-                "doc_id",
-                "m00",
-                "m10",
-                "m01",
-                "centroid_r_milli",
-                "centroid_c_milli",
-            )
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(buf[start:pos])
-            pos += 1
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-            gray = px.reshape(h, w, 3).astype(np.int64).sum(axis=2)
-            m00 = int(gray.sum())
-            rows = np.arange(h, dtype=np.int64)[:, None]
-            cols = np.arange(w, dtype=np.int64)[None, :]
-            m10 = int((rows * gray).sum())
-            m01 = int((cols * gray).sum())
-            recs["doc_id"].append(int(doc_id))
-            recs["m00"].append(m00)
-            recs["m10"].append(m10)
-            recs["m01"].append(m01)
-            recs["centroid_r_milli"].append(
-                m10 * 1000 // m00 if m00 else 0
-            )
-            recs["centroid_c_milli"].append(
-                m01 * 1000 // m00 if m00 else 0
-            )
-        yield pd.DataFrame(recs)
+@_per_payload(_MOMENTS_SCHEMA)
+def _image_moments(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    """mapInPandas worker: vectorized raw moments of the gray image +
+    milli centroids."""
+    gray = _read_gray(buf)
+    h, w = gray.shape
+    m00 = int(gray.sum())
+    m10 = int((np.arange(h, dtype=np.int64)[:, None] * gray).sum())
+    m01 = int((np.arange(w, dtype=np.int64)[None, :] * gray).sum())
+    yield (
+        doc_id, m00, m10, m01,
+        m10 * 1000 // m00 if m00 else 0,
+        m01 * 1000 // m00 if m00 else 0,
+    )
 
 
 def multimodal_image_moments(
@@ -1998,39 +1723,15 @@ _SYMMETRY_SCHEMA = (
 )
 
 
-def _image_symmetry(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    """mapInPandas worker: parse P6, gray = channel sum, vectorized
-    mirror-difference accumulation."""
-    import numpy as np
-
-    for pdf in batches:
-        recs = {k: [] for k in ("doc_id", "asym_sum", "gray_mass", "asym_ppm")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            buf = bytes(payload)
-            tokens, pos = [], 0
-            while len(tokens) < 4:
-                while buf[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(buf[start:pos])
-            pos += 1
-            w, h = int(tokens[1]), int(tokens[2])
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-            gray = px.reshape(h, w, 3).astype(np.int64).sum(axis=2)
-            half = w // 2
-            asym = int(
-                np.abs(gray[:, :half] - gray[:, ::-1][:, :half]).sum()
-            )
-            mass = int(gray.sum())
-            recs["doc_id"].append(int(doc_id))
-            recs["asym_sum"].append(asym)
-            recs["gray_mass"].append(mass)
-            recs["asym_ppm"].append(
-                asym * 1_000_000 // mass if mass else 0
-            )
-        yield pd.DataFrame(recs)
+@_per_payload(_SYMMETRY_SCHEMA)
+def _image_symmetry(doc_id: int, buf: bytes) -> Iterator[tuple]:
+    """mapInPandas worker: vectorized mirror-difference accumulation on
+    the gray image."""
+    gray = _read_gray(buf)
+    half = gray.shape[1] // 2
+    asym = int(np.abs(gray[:, :half] - gray[:, ::-1][:, :half]).sum())
+    mass = int(gray.sum())
+    yield doc_id, asym, mass, asym * 1_000_000 // mass if mass else 0
 
 
 def multimodal_image_symmetry(
@@ -2102,40 +1803,18 @@ _SSIM_SCHEMA = (
 def _ssim_sums(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
     """mapInPandas worker: decode both P6 payloads of a pair, emit the
     five exact integer pixel sums the SSIM algebra needs."""
-    import numpy as np
-
-    def gray(payload) -> "np.ndarray":
-        buf = bytes(payload)
-        tokens, pos = [], 0
-        while len(tokens) < 4:
-            while buf[pos : pos + 1].isspace():
-                pos += 1
-            start = pos
-            while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                pos += 1
-            tokens.append(buf[start:pos])
-        pos += 1
-        w, h = int(tokens[1]), int(tokens[2])
-        px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
-        return px.reshape(-1, 3).astype(np.int64).sum(axis=1)
-
     for pdf in batches:
-        recs = {
-            k: []
-            for k in ("doc_a", "doc_b", "s1a", "s1b", "s2a", "s2b", "s12")
-        }
+        rows = []
         for doc_a, doc_b, pa, pb in zip(
             pdf["doc_a"], pdf["doc_b"], pdf["pa"], pdf["pb"]
         ):
-            ga, gb = gray(pa), gray(pb)
-            recs["doc_a"].append(int(doc_a))
-            recs["doc_b"].append(int(doc_b))
-            recs["s1a"].append(int(ga.sum()))
-            recs["s1b"].append(int(gb.sum()))
-            recs["s2a"].append(int((ga * ga).sum()))
-            recs["s2b"].append(int((gb * gb).sum()))
-            recs["s12"].append(int((ga * gb).sum()))
-        yield pd.DataFrame(recs)
+            ga = _read_gray(bytes(pa)).reshape(-1)
+            gb = _read_gray(bytes(pb)).reshape(-1)
+            rows.append((
+                int(doc_a), int(doc_b), int(ga.sum()), int(gb.sum()),
+                int((ga * ga).sum()), int((gb * gb).sum()), int((ga * gb).sum()),
+            ))
+        yield _pandas_batch(_SSIM_SCHEMA, rows)
 
 
 def multimodal_image_ssim(spark: SparkSession, sf_dir: str) -> DataFrame:

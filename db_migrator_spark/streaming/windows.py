@@ -572,8 +572,7 @@ def streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (typed per-key state handles instead of a single state tuple).
 #
 # ENVIRONMENT GATE: the API's Python state-server protocol requires
-# protobuf, which this container does not ship (same class of gate as
-# the PIL decoders in operators/multimodal.py). The operator below is
+# protobuf, an optional dependency. The operator below is
 # complete and its bounded-replay contract is the plain GROUP BY twin
 # (_TWS_ORACLE_SQL); the driver-contract declaration activates only
 # where protobuf imports, and tests/test_round7_ops.py carries the

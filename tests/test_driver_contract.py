@@ -177,3 +177,25 @@ def test_driver_window_budget():
             f"attestation debt past {budget}: drain first "
             f"(drain schedule: __spark_entry__ module docstring)"
         )
+
+
+def test_verify_oracle_fails_on_an_undeclared_name():
+    """A requested query name that no module declares (a typo) fails the
+    oracle gate with a FAIL line and exit 1, before a Spark session
+    starts, instead of passing as "0/0 passed". The run stops before it
+    opens the catalog, so the catalog path need not exist."""
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(_ROOT, "tools", "verify_oracle.py"),
+            "no-such-catalog",
+            "multimodal_decode_pmm",
+        ],
+        cwd="/tmp",
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 1, proc.stdout + proc.stderr[-3000:]
+    assert "FAIL  multimodal_decode_pmm: not a declared query" in proc.stdout
+    assert "passed" not in proc.stdout

@@ -105,13 +105,6 @@ def test_frame_sample_shape(spark):
         assert 1 <= len(idxs) <= 3
 
 
-def test_decode_real_raises_without_pil():
-    from db_migrator_spark.operators import multimodal
-
-    if not multimodal.HAVE_PIL:
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_image_real(b"\x89PNG")
-
 def test_embedding_cosine_dedup_near_dup_regime(spark, tmp_path):
     """Sign-band blocking recall in the regime it is designed for: planted
     near-identical vectors (cos ~0.999) must be recovered; fixture-level
@@ -386,6 +379,82 @@ def test_wav_decoder_parses_a_real_wav():
 
     with _pytest.raises(ValueError):
         next(_decode_wav(iter([pd.DataFrame({"doc_id": [1], "payload": [b"RIFFxxxxWAVE"]})])))
+
+
+_IMAGE_WORKERS = (
+    "_decode_ppm", "_resize_ppm", "_patchify", "_ahash", "_ahash64",
+    "_channel_stats", "_phash", "_sobel_energy", "_lum_histogram",
+    "_image_moments", "_image_symmetry", "_decode_video", "_ssim_sums",
+)
+_AUDIO_WORKERS = ("_decode_wav", "_frame_energy", "_audio_fp", "_frame_zcr")
+
+
+def _wav_bytes(riff=b"RIFF", fmt_code=1, with_data=True, n_samples=256):
+    """A 16-bit mono WAV, optionally broken in one place."""
+    import struct
+
+    data = struct.pack(f"<{n_samples}h", *range(n_samples))
+    body = b"WAVE" + b"fmt " + struct.pack("<IHHIIHH", 16, fmt_code, 1, 8000, 16000, 2, 16)
+    if with_data:
+        body += b"data" + struct.pack("<I", len(data)) + data
+    return riff + struct.pack("<I", len(body)) + body
+
+
+# A full 16x16 raster follows each bad image header, so only the header
+# is wrong.
+_RASTER = bytes(range(256)) * 3
+_MALFORMED = {
+    "p5_magic": b"P5\n16 16\n255\n" + _RASTER,
+    "maxval_65535": b"P6\n16 16\n65535\n" + _RASTER * 2,
+    "truncated_header": b"P6\n16 16",
+    "not_riff": _wav_bytes(riff=b"RIFX"),
+    "non_pcm_fmt": _wav_bytes(fmt_code=3),
+    "no_data_chunk": _wav_bytes(with_data=False),
+    "empty_data_chunk": _wav_bytes(n_samples=0),
+}
+
+
+@pytest.mark.parametrize(
+    "worker,case",
+    [(w, c) for w in _IMAGE_WORKERS for c in ("p5_magic", "maxval_65535", "truncated_header")]
+    + [(w, c) for w in _AUDIO_WORKERS for c in ("not_riff", "non_pcm_fmt", "no_data_chunk", "empty_data_chunk")],
+)
+def test_decode_workers_reject_malformed_payloads(worker, case):
+    """Every decode worker reads its payload through the one P6 or RIFF
+    reader, so each rejects the same malformed inputs with ValueError:
+    no worker decodes a P5 or 16-bit image as 8-bit P6, or a non-RIFF,
+    non-PCM or sample-less file as audio."""
+    import pandas as pd
+
+    from db_migrator_spark.operators import multimodal
+
+    payload = _MALFORMED[case]
+    if worker == "_ssim_sums":
+        pdf = pd.DataFrame({"doc_a": [1], "doc_b": [2], "pa": [payload], "pb": [payload]})
+    else:
+        pdf = pd.DataFrame({"doc_id": [1], "payload": [payload]})
+    with pytest.raises(ValueError):
+        list(getattr(multimodal, worker)(iter([pdf])))
+
+
+def test_video_demux_walks_frames_by_end_offset():
+    """A hand-built 2-frame P6 stream demuxes frame by frame: frames of
+    different sizes and header spacing, each raster starting with a
+    whitespace byte that belongs to the pixels, not the header."""
+    import pandas as pd
+
+    from db_migrator_spark.operators.multimodal import _decode_video
+
+    frame0 = b"P6\n2 1\n255\n" + bytes([10, 20, 30, 40, 50, 60])  # gray 210
+    frame1 = b"P6 1 1 255 " + bytes([32, 100, 168])  # gray 300
+    pdf = pd.DataFrame({"doc_id": [5], "payload": [frame0 + frame1]})
+    out = next(_decode_video(iter([pdf])))
+    assert list(out.doc_id) == [5, 5]
+    assert list(out.frame_id) == [0, 1]
+    assert list(out.gray_sum) == [210, 300]
+    assert pd.isna(out.delta_gray[0]) and out.delta_gray[1] == 90
+    # 90 * 10 > 210: the second frame is a cut; the first never is
+    assert list(out.is_cut) == [False, True]
 
 
 def test_semantic_dedup_core_accepts_finer_clustering(spark):

@@ -705,9 +705,8 @@ def test_histogram_conserves_rows_and_bounds(spark):
 
 def test_transform_with_state_totals(spark):
     """transformWithStateInPandas running totals equal the batch GROUP
-    BY — skipped where the API's protobuf dependency is absent (this
-    container; the operator is environment-gated like the PIL
-    decoders)."""
+    BY — skipped where the API's protobuf dependency is absent (the
+    operator is environment-gated on it)."""
     from db_migrator_spark.streaming.windows import HAVE_PROTOBUF
 
     if not HAVE_PROTOBUF:

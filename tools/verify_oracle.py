@@ -59,6 +59,16 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from db_migrator_spark.session import get_spark
 
+    qs = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
+    # A requested name that is not declared (a typo) must fail the run,
+    # not shrink it to "0/0 passed"; checked before the JVM starts.
+    unknown = sorted(only - set(qs))
+    for name in unknown:
+        print(f"FAIL  {name}: not a declared query")
+    if unknown:
+        return 1
+
     spark = get_spark("verify-oracle")
     con = duckdb.connect()
     # Spills land in a bounded scratch dir, never the repo cwd (a
@@ -72,9 +82,6 @@ def main() -> int:
         if os.path.isdir(path):  # Spark-written datasets are directories
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
 
     # Oracle-loss guard: a query that EVER hash-checked in a driver
     # CORRECTNESS artifact must still declare an oracle. Without this, a
