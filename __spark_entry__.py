@@ -34,7 +34,6 @@ _MODULES = [
     "db_migrator_spark.operators.bucketed",
     "db_migrator_spark.operators.skew",
     "db_migrator_spark.operators.dedup",
-    "db_migrator_spark.operators.dedup2",
     "db_migrator_spark.operators.text",
     "db_migrator_spark.operators.similarity",
     "db_migrator_spark.operators.similarity_ivf",
@@ -199,10 +198,9 @@ def _collect() -> tuple[dict, dict]:
     qs: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     os_: dict[str, str] = {}
     for modname in _MODULES:
-        try:
-            mod = importlib.import_module(modname)
-        except ModuleNotFoundError:
-            continue
+        # No skip on ImportError: a stale or broken entry must fail the
+        # whole contract, not silently drop its queries.
+        mod = importlib.import_module(modname)
         qs.update(getattr(mod, "QUERIES", {}))
         os_.update(getattr(mod, "ORACLES", {}))
     ordered = {k: qs[k] for k in _evidence_order(list(qs), os_)}

@@ -157,8 +157,13 @@ def build_ivf_index(
     )
     sample /= np.linalg.norm(sample, axis=1, keepdims=True) + 1e-30
     centroids = _fit_spherical_kmeans(sample, min(k, len(sample)))
-    if len(centroids) < k:  # degenerate tiny sample: pad to the k contract
-        pad = np.zeros((k - len(centroids), sample.shape[1]))
+    if len(centroids) < k:
+        # Degenerate tiny sample: pad to the k contract with COPIES of
+        # real centroids. A zero pad row scores cosine 0, so a vector
+        # whose cosine to every real centroid is negative would land in
+        # an empty pad cell; a copy ties its original, and argmax keeps
+        # the first (real) index.
+        pad = centroids[np.arange(k - len(centroids)) % len(centroids)]
         centroids = np.vstack([centroids, pad])
 
     @F.pandas_udf("int")

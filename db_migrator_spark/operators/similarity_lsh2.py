@@ -35,10 +35,10 @@ dimension key — no cartesian, no floats, no collect.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window as W
 
 from ..io import load_table
 from .corpus5 import _isqrt
+from .dedup import _bucket_pairs, _cap_members
 
 LSH_PLANES = 16
 PLANES_PER_BAND = 4
@@ -122,24 +122,13 @@ def similarity_lsh_portable(
             ).alias("key")
         )
     )
-    capped = (
-        bands.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("band", "key").orderBy("vec_id")
-            ),
-        )
-        .filter(F.col("rn") <= LSH2_BUCKET_CAP)
-        .drop("rn")
-    )
+    capped = _cap_members(bands, ["band", "key"], "vec_id", LSH2_BUCKET_CAP)
     # Row-local C(k,2) pair explode over the CAPPED buckets (<= 64
     # members — the r9e idiom's win condition, re-landed round 10): the
     # cap's window already shuffled on (band, key), the groupBy reuses
     # that partitioning, and the pair explode runs in codegen instead of
-    # re-shuffling the banded keys for a self-join (shared
-    # dedup._bucket_pairs; oracle unchanged — values contract).
-    from .dedup import _bucket_pairs
-
+    # re-shuffling the banded keys for a self-join (oracle unchanged —
+    # values contract).
     cand = _bucket_pairs(capped, ["band", "key"], "vec_id").select(
         F.col("d1").alias("v1"), F.col("d2").alias("v2")
     )

@@ -57,10 +57,7 @@ def test_no_query_name_collisions_across_modules():
 
     seen = {}
     for modname in e._MODULES:
-        try:
-            mod = importlib.import_module(modname)
-        except ModuleNotFoundError:
-            continue
+        mod = importlib.import_module(modname)
         for k in getattr(mod, "QUERIES", {}):
             assert k not in seen, f"{k} defined in both {seen[k]} and {modname}"
             seen[k] = modname
@@ -113,6 +110,34 @@ def test_rows_only_set_is_pinned():
         "similarity_lsh_pairs",
         "similarity_pq_topk",
     }
+
+
+def test_declared_and_oracle_counts_are_pinned():
+    """The contract's size is pinned: 371 declared queries, 362 of them
+    with a DuckDB oracle. A module dropped from ``_MODULES`` (or a merge
+    that loses a ``QUERIES`` entry) changes these counts; a deliberate
+    change to the surface updates them here."""
+    import __spark_entry__ as e
+
+    assert len(e.queries()) == 371
+    assert len(e.oracle_sql()) == 362
+
+
+def test_unknown_registry_module_fails_loudly(monkeypatch):
+    """A ``_MODULES`` entry that cannot be imported (a module deleted or
+    renamed without updating the registry) must raise, not silently drop
+    that module's queries from the contract."""
+    import pytest
+
+    import __spark_entry__ as e
+
+    monkeypatch.setattr(
+        e, "_MODULES", [*e._MODULES, "db_migrator_spark.operators.no_such_module"]
+    )
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        e.queries()
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        e.oracle_sql()
 
 
 def test_driver_window_budget():

@@ -141,3 +141,42 @@ def test_ivf_hard_negatives_recall_vs_bruteforce(spark):
         assert -1.0 <= r.cos_sim <= 1.0
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.4, (recall, sorted(exact - approx))
+
+
+def test_ivf_pad_cells_copy_real_centroids(spark, tmp_path, monkeypatch):
+    """When the training sample has fewer rows than ``k_cells``, the
+    centroid matrix is padded to k. A vector whose cosine to every real
+    centroid is negative (here: one opposite to all other data, left out
+    of a ~6-row sample with probability ~0.98) must still land in a real
+    cell: a centroid row that is non-zero and the first of its copies."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from db_migrator_spark.operators import similarity_ivf
+
+    rng = np.random.RandomState(7)
+    vecs = [[1.0, *rng.uniform(0.0, 0.5, 3)] for _ in range(300)]
+    vecs.append([-1.0, -0.2, -0.2, -0.2])
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(len(vecs)), pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                "label": pa.array([0] * len(vecs), pa.int32()),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    monkeypatch.setattr(similarity_ivf, "TRAIN_SAMPLE_MAX", 6)
+    k = 40
+    indexed, centroids = similarity_ivf.build_ivf_index(
+        spark, str(tmp_path), k_cells=k
+    )
+    assert centroids.shape == (k, 4)
+    cells = {r.vec_id: r.cell for r in indexed.collect()}
+    for vec_id, cell in cells.items():
+        row = centroids[cell]
+        assert np.linalg.norm(row) > 0, (vec_id, cell)
+        first = next(i for i in range(k) if np.array_equal(centroids[i], row))
+        assert cell == first, (vec_id, cell, first)

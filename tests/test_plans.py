@@ -718,8 +718,10 @@ def test_portable_lsh_trio_no_cartesian(spark):
     """The portable (fully-oracled) LSH variants must stay bucket-
     blocked equi-joins like their fast siblings: candidates join on
     (band, key), verify joins on the shingle/dimension key."""
-    from db_migrator_spark.operators.dedup import dedup_minhash_portable
-    from db_migrator_spark.operators.dedup2 import dedup_simhash_portable
+    from db_migrator_spark.operators.dedup import (
+        dedup_minhash_portable,
+        dedup_simhash_portable,
+    )
     from db_migrator_spark.operators.similarity_lsh2 import (
         similarity_lsh_portable,
     )
@@ -731,3 +733,43 @@ def test_portable_lsh_trio_no_cartesian(spark):
     ):
         plan = plan_string(df)
         assert "CartesianProduct" not in plan, plan[:2000]
+
+
+def test_shingle_self_join_hashed_sizes_broadcast(spark, monkeypatch):
+    """The all-pairs shingle operators share one plan shape
+    (``dedup._overlapping_pairs``): the inverted-index self-join is a
+    ShuffledHashJoin on the shingle key, the per-doc sizes join by
+    broadcast on the doc ids, and nothing is a CartesianProduct. The
+    self-join of dedup_ngram_jaccard and dedup_threshold_sweep sits
+    under a localCheckpoint, so the plans of checkpointed frames are
+    captured too."""
+    import re
+
+    from db_migrator_spark.operators.dedup import (
+        dedup_containment,
+        dedup_ngram_jaccard,
+        dedup_threshold_sweep,
+    )
+
+    plans = []
+    frame_cls = type(spark.range(1))
+    checkpoint = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(plan_string(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    for build in (dedup_ngram_jaccard, dedup_containment, dedup_threshold_sweep):
+        plans.clear()
+        plans.append(plan_string(build(spark, SF)))
+        text = "\n".join(plans)
+        assert "CartesianProduct" not in text, build.__name__
+        hashed = re.findall(
+            r"\) ShuffledHashJoin.*\nLeft keys \[1\]: \[(\w+)#", text
+        )
+        assert hashed and set(hashed) <= {"shingle", "s"}, (build.__name__, hashed)
+        broadcast = re.findall(
+            r"\) BroadcastHashJoin.*\nLeft keys \[1\]: \[(\w+)#", text
+        )
+        assert {"d1", "d2"} <= set(broadcast), (build.__name__, broadcast)

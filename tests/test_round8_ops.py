@@ -2658,7 +2658,7 @@ def test_lsh_portable_exactness_and_recall(spark):
 def test_simhash_portable_bits_and_verify(spark):
     import hashlib
 
-    from db_migrator_spark.operators.dedup2 import (
+    from db_migrator_spark.operators.dedup import (
         SIMHASH2_HAM_MAX,
         SIMHASH2_JACCARD_PPM,
         dedup_simhash_portable,
@@ -2742,10 +2742,8 @@ def test_minhash_estimator_audit_consistency(spark):
     from db_migrator_spark.operators.dedup import (
         PORTABLE_JACCARD_PPM,
         PORTABLE_MINHASH_K,
-        dedup_minhash_portable,
-    )
-    from db_migrator_spark.operators.dedup2 import (
         dedup_minhash_estimator_audit,
+        dedup_minhash_portable,
     )
 
     sf = "/root/testdata/sf0.001"
